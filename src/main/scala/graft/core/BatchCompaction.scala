@@ -1,8 +1,9 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
+
+import BatchSink.BatchCol
 
 /** Compaction for `__batch_id`-partitioned streaming sinks.
   *
@@ -36,8 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object BatchCompaction {
 
-  val BatchCol = "__batch_id"
-
   /** Fold old batch partitions of the table at `path` into one new
     * compacted segment, keeping the newest `keepRecent` real batches
     * live for replay. Returns the new segment id, or None when there
@@ -63,14 +62,11 @@ object BatchCompaction {
       new Path(root, s"$BatchCol=${victims.head}"))
     val merged = spark.read.option("basePath", path)
       .parquet(victims.map(b => s"$path/$BatchCol=$b"): _*)
-      .withColumn(BatchCol, lit(newSegment))
+      .drop(BatchCol)
       // collapses cross-batch duplicates (redelivered ids, healed
       // crash leftovers); batch provenance is gone by design here
       .dropDuplicates()
-    merged.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BatchCol +: subCols: _*)
-      .parquet(path)
+    BatchSink.write(merged, newSegment, path, subCols: _*)
     victims.foreach(b => fs.delete(new Path(root, s"$BatchCol=$b"), true))
     Some(newSegment)
   }

@@ -15,10 +15,14 @@ import org.apache.spark.sql.functions._
   * Write disciplines:
   *  - [[append]] — blind append (bronze ingest; dedupe happens on read or
   *    downstream via anti-joins).
-  *  - [[appendIfAbsent]] — the reference's idempotent insert: anti-join
-  *    against the existing rows *in the touched window only* before
-  *    appending (fact_wazuh_events.sql:76-79). Reading only the window's
+  *  - [[appendIfAbsent]] — the reference's idempotent insert: one row
+  *    per key from the input, anti-joined against the existing rows *in
+  *    the touched window only* before appending
+  *    (fact_wazuh_events.sql:76-79). Reading only the window's
   *    partitions keeps the anti-join bounded regardless of table size.
+  *
+  * Per-micro-batch `__batch_id` replay writes are a different layout,
+  * owned by [[BatchSink]].
   */
 object PartitionedWriter {
 
@@ -53,14 +57,15 @@ object PartitionedWriter {
   }
 
   /** Append rows whose `keys` are not already present in the target's
-    * partitions overlapping [the rows' own dates]. Returns rows appended.
-    * An all-duplicates (or empty) input writes nothing — parquet dirs
-    * never end up file-less/schema-less. */
+    * partitions overlapping [the rows' own dates]; rows repeating a key
+    * within `df` (at-least-once redeliveries) land once. Returns rows
+    * appended. An all-duplicates (or empty) input writes nothing —
+    * parquet dirs never end up file-less/schema-less. */
   def appendIfAbsent(df: DataFrame, path: String, tsCol: String,
       keys: Seq[String]): Long = {
     val spark = df.sparkSession
     healFirst(spark, path)
-    val dated = withDate(df, tsCol)
+    val dated = withDate(df, tsCol).dropDuplicates(keys)
     val fresh =
       if (exists(spark, path)) {
         // restrict the existing-side scan to the touched dates (partition
@@ -77,15 +82,6 @@ object PartitionedWriter {
       fresh.write.mode(SaveMode.Append).partitionBy(DateCol).parquet(path)
     fresh.unpersist()
     n
-  }
-
-  /** Full overwrite of only the partitions present in df (MERGE-style
-    * window replacement; requires partitionOverwriteMode=dynamic, set by
-    * GraftSession). */
-  def replacePartitions(df: DataFrame, path: String, tsCol: String): Unit = {
-    healFirst(df.sparkSession, path)
-    withDate(df, tsCol).write.mode(SaveMode.Overwrite)
-      .partitionBy(DateCol).parquet(path)
   }
 
   def exists(spark: SparkSession, path: String): Boolean = {

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.BatchSink
 
 /** Gram-partitioned persistent home for continuous containment dedupe —
   * the [[LshIndex]] posture applied to [[Dedup.selfContainmentPairs]]:
@@ -70,7 +72,7 @@ import org.apache.spark.sql.functions._
   * therefore accumulates nothing across triggers. */
 object ContainmentIndex {
 
-  val BatchCol = "__batch_id"
+  val BatchCol = BatchSink.BatchCol
   val PostPart = "__pp"
   val DocPart = "__dp"
 
@@ -165,27 +167,17 @@ object ContainmentIndex {
       // docs BEFORE postings: exists() keys on both, so the torn state
       // between the two writes is indistinguishable from "batch never
       // appended" on the first batch and is rewritten in place on replay
-      sh.select(col("__id"), col("__sh"))
+      BatchSink.write(sh.select(col("__id"), col("__sh"))
         .withColumn(DocPart, dp(col("__id"), numBuckets))
-        .withColumn(BatchCol, lit(batchId))
-        .repartition(col(DocPart))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol, DocPart)
-        .parquet(docsPath(root))
+        .repartition(col(DocPart)), batchId, docsPath(root), DocPart)
       // route rows to their partition BEFORE the write (the d8 summing
       // file discipline): without it every shuffle task writes into every
       // partition dir — numBuckets × parallelism tiny files per batch,
       // and the probe pays the listing/open cost forever after. Routed,
       // each (batch, bucket) dir holds one file
-      sh.select(col("__id"), explode(col("__sh")).as("__g"))
+      BatchSink.write(sh.select(col("__id"), explode(col("__sh")).as("__g"))
         .withColumn(PostPart, pp(col("__g"), numBuckets))
-        .withColumn(BatchCol, lit(batchId))
-        .repartition(col(PostPart))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol, PostPart)
-        .parquet(postingsPath(root))
+        .repartition(col(PostPart)), batchId, postingsPath(root), PostPart)
     } finally { sh.unpersist(); () }
   }
 

@@ -4,6 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.BatchSink
+import graft.core.BatchSink.BatchCol
+
 /** Cell-partitioned persistent home for the IVF ANN index — the
   * similarity-search counterpart of [[LshIndex]]'s layout argument.
   *
@@ -36,7 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndex {
 
-  val BatchCol = "__batch_id"
   val CellPart = "__cell"
 
   private def cellsPath(root: String) = s"$root/cells"
@@ -119,13 +121,9 @@ object IvfIndex {
   private def appendAssigned(vecs: DataFrame, root: String, batchId: Long,
       idCol: String, vecCol: String): Unit = {
     val cents = centroids(vecs.sparkSession, root)
-    Similarity.assignCells(vecs, cents, idCol, vecCol)
-      .select(col(idCol), col(vecCol), col("centroid_id").as(CellPart))
-      .withColumn(BatchCol, lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BatchCol, CellPart)
-      .parquet(cellsPath(root))
+    BatchSink.write(Similarity.assignCells(vecs, cents, idCol, vecCol)
+      .select(col(idCol), col(vecCol), col("centroid_id").as(CellPart)),
+      batchId, cellsPath(root), CellPart)
   }
 
   /** Cell read restricted to the probed partitions — the `IN` on the

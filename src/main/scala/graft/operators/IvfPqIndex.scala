@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.BatchSink
+
 /** Persistent IVF-PQ index — the compressed serving layout of
   * [[Similarity.ivfPqTopK]], completing the serving-index family
   * ([[IvfIndex]] raw vectors, [[LshIndex]] band keys,
@@ -30,7 +32,6 @@ import org.apache.spark.sql.functions._
   * cannot change results. */
 object IvfPqIndex {
 
-  val BatchCol = "__batch_id"
   val CellPart = "__cell"
 
   private def codesPath(root: String) = s"$root/codes"
@@ -125,14 +126,11 @@ object IvfPqIndex {
     val cells = Similarity.assignCells(
       vecs.select(col(idCol), col(vecCol)),
       centroids(spark, root), idCol, vecCol)
-    Similarity.pqEncode(vecs, codebook(spark, root), m, dim, idCol, vecCol)
-      .join(cells.select(col(idCol), col("centroid_id").as(CellPart)),
-        Seq(idCol))
-      .withColumn(BatchCol, lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BatchCol, CellPart)
-      .parquet(codesPath(root))
+    BatchSink.write(
+      Similarity.pqEncode(vecs, codebook(spark, root), m, dim, idCol, vecCol)
+        .join(cells.select(col(idCol), col("centroid_id").as(CellPart)),
+          Seq(idCol)),
+      batchId, codesPath(root), CellPart)
   }
 
   private[graft] def prunedCodes(spark: SparkSession, root: String,

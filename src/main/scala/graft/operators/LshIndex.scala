@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.BatchSink
 
 /** Bucket-partitioned persistent home for [[Dedup.buildIndex]] output —
   * the layout that makes continuous dedupe IO-incremental, not just
@@ -51,7 +53,7 @@ import org.apache.spark.sql.functions._
   */
 object LshIndex {
 
-  val BatchCol = "__batch_id"
+  val BatchCol = BatchSink.BatchCol
   val MemberPart = "__pb"
   val GramPart = "__gp"
 
@@ -120,21 +122,13 @@ object LshIndex {
     // lifetime, not once per batch
     if (!exists(spark, root) && index.isEmpty) return
     ensureMeta(spark, root, numBuckets)
-    index.select(col("__id"), col("__sh"))
-      .withColumn(GramPart, gp(col("__id"), numBuckets))
-      .withColumn(BatchCol, lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BatchCol, GramPart)
-      .parquet(gramsPath(root))
-    index
+    BatchSink.write(index.select(col("__id"), col("__sh"))
+      .withColumn(GramPart, gp(col("__id"), numBuckets)),
+      batchId, gramsPath(root), GramPart)
+    BatchSink.write(index
       .select(col("__id"), posexplode(col("__bands")).as(Seq("__b", "__bh")))
-      .withColumn(MemberPart, pb(col("__bh"), numBuckets))
-      .withColumn(BatchCol, lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BatchCol, MemberPart)
-      .parquet(membersPath(root))
+      .withColumn(MemberPart, pb(col("__bh"), numBuckets)),
+      batchId, membersPath(root), MemberPart)
   }
 
   /** Membership read restricted to the given partition prefixes — the

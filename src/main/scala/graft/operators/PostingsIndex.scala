@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.BatchSink
 
 /** Term-partitioned persistent home for the BM25 inverted index — the
   * lexical counterpart of [[IvfIndex]]'s layout argument.
@@ -36,7 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object PostingsIndex {
 
-  val BatchCol = "__batch_id"
   val TermPart = "__tp"
 
   private def postingsPath(root: String) = s"$root/postings"
@@ -133,22 +134,15 @@ object PostingsIndex {
       textCol: String, idCol: String, parts: Int): Unit = {
     // one file per (batch, term-partition); rows sorted by term inside
     // each file so the residual term predicate also skips row groups
-    Retrieval.postings(docs, textCol, idCol)
+    BatchSink.write(Retrieval.postings(docs, textCol, idCol)
       .withColumn(TermPart, termPartition(col("term"), parts))
-      .withColumn(BatchCol, lit(batchId))
       .repartition(col(TermPart))
-      .sortWithinPartitions(col(TermPart), col("term"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BatchCol, TermPart)
-      .parquet(postingsPath(root))
-    docs.select(size(Retrieval.termsOf(col(textCol))).as("__dl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("__dl")).as("sum_dl"))
-      .withColumn(BatchCol, lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BatchCol)
-      .parquet(statsPath(root))
+      .sortWithinPartitions(col(TermPart), col("term")),
+      batchId, postingsPath(root), TermPart)
+    BatchSink.write(
+      docs.select(size(Retrieval.termsOf(col(textCol))).as("__dl"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("__dl")).as("sum_dl")),
+      batchId, statsPath(root))
   }
 
   /** Corpus scalars summed exactly over the per-batch stats rows —

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.BatchCompaction
+import graft.core.{BatchCompaction, BatchSink}
 import graft.operators.{IvfIndex, IvfPqIndex}
 
 /** Continuous embedding ingestion into the persisted ANN index — the
@@ -20,11 +20,9 @@ import graft.operators.{IvfIndex, IvfPqIndex}
   * point the stream at it; every later batch is assignment-only either
   * way.
   *
-  * Replay safety: foreachBatch is at-least-once. Appends are
-  * `__batch_id`-partitioned with dynamic overwrite, so a re-delivered
-  * batch rewrites its own partitions; a re-delivered BUILD batch (id 0)
-  * re-assigns under the already-frozen centroids instead of
-  * re-training ([[IvfIndex.replayAppend]]), so the centroid set — and
+  * Replay safety: appends go through [[graft.core.BatchSink]]; a
+  * re-delivered BUILD batch (id 0) re-assigns under the already-frozen
+  * centroids instead of re-training ([[IvfIndex.replayAppend]]), so the centroid set — and
   * therefore every earlier batch's cell assignment — never shifts
   * under replay. Run [[compactSinks]] on a maintenance cadence to fold
   * old batch partitions; queries collapse duplicates per vector id, so
@@ -59,21 +57,17 @@ object AnnStream {
       nlist: Int, kmeansIters: Int = 0, idCol: String = "vec_id",
       vecCol: String = "embedding",
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexPath, nlist, kmeansIters,
-          idCol, vecCol)
-      }
-      .start()
+    BatchSink.start(vectors, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, indexPath, nlist, kmeansIters,
+        idCol, vecCol)
+    }
 
   /** Compressed-index twin: same train-on-first / encode-on-rest
     * contract against [[IvfPqIndex]] — the streamed store is codes-only
     * (m small ints per vector), so continuous ingestion writes the
     * 32×-smaller serving layout directly. Replay discipline is
-    * identical (batch-partitioned dynamic overwrite; a re-delivered
-    * build batch re-encodes under frozen artifacts). */
+    * identical ([[graft.core.BatchSink]]; a re-delivered build batch
+    * re-encodes under frozen artifacts). */
   def processBatchPq(batch: DataFrame, batchId: Long, indexPath: String,
       nlist: Int, m: Int, ksub: Int, dim: Int, kmeansIters: Int = 0,
       pqIters: Int = 0, idCol: String = "vec_id",
@@ -101,12 +95,8 @@ object AnnStream {
       pqIters: Int = 0, idCol: String = "vec_id",
       vecCol: String = "embedding",
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchPq(batch, batchId, indexPath, nlist, m, ksub, dim,
-          kmeansIters, pqIters, idCol, vecCol)
-      }
-      .start()
+    BatchSink.start(vectors, checkpointDir, trigger) { (batch, batchId) =>
+      processBatchPq(batch, batchId, indexPath, nlist, m, ksub, dim,
+        kmeansIters, pqIters, idCol, vecCol)
+    }
 }

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import org.apache.spark.sql.GraftColumnBridge.{column => toCol, eagerExpression}
+import graft.core.BatchSink
 import graft.functions.{BitmapAgg, BitmapOrAgg, BitmapAndAgg}
-import graft.operators.LshIndex
 
 /** Streaming EXACT audience sets — the continuous feed of the bitmap
   * state store ([[graft.functions.BitmapAgg]]), the family's
@@ -17,9 +17,7 @@ import graft.operators.LshIndex
   * [[audienceView]]. Raw event rows never persist — only the per-key
   * distinct ids, which is the floor for an EXACT answer.
   *
-  * Same sink discipline as [[UniqStream]]: batch-id partitions with
-  * dynamic overwrite, so an at-least-once replay rewrites its own
-  * partition instead of double-landing — and like HLL (and unlike
+  * Replay: [[graft.core.BatchSink]] — and like HLL (and unlike
   * additive counters), set union is IDEMPOTENT, so even a duplicated
   * state row cannot change the audience. [[graft.core
   * .BatchCompaction]] folds old batch partitions; the OR-view is
@@ -28,8 +26,6 @@ import graft.operators.LshIndex
   * coarsens — documented, the reader that needs per-batch AND
   * granularity reads before compaction. */
 object BitmapStream {
-
-  private val BatchCol = LshIndex.BatchCol
 
   private def stateAgg(c: Column): Column =
     toCol(BitmapAgg(eagerExpression(c)).toAggregateExpression())
@@ -45,25 +41,16 @@ object BitmapStream {
   def processBatch(batch: DataFrame, batchId: Long, keyCols: Seq[String],
       idCol: String, path: String): Unit = {
     if (!batch.isEmpty)
-      batch.groupBy(keyCols.map(col): _*)
-        .agg(stateAgg(col(idCol)).as("bitmap_state"))
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(path)
+      BatchSink.write(batch.groupBy(keyCols.map(col): _*)
+        .agg(stateAgg(col(idCol)).as("bitmap_state")), batchId, path)
   }
 
   def start(events: DataFrame, keyCols: Seq[String], idCol: String,
       path: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, keyCols, idCol, path)
-      }
-      .start()
+    BatchSink.start(events, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, keyCols, idCol, path)
+    }
 
   /** Reader fold: per key, the OR-merged audience (every id ever
     * seen) and the AND-merged core (ids present in EVERY stored

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.PartitionedWriter
+import graft.core.{BatchSink, PartitionedWriter}
 import graft.ingest.Bronze
 
 /** Continuous bronze ingest — the Structured Streaming re-expression of
@@ -76,17 +76,13 @@ object BronzeStream {
     * partitioned by event_date and sorted for scan locality). */
   def start(raw: DataFrame, warehouseDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cached = batch.cache()
-        try Bronze.route(cached).foreach { case (src, df) =>
-          if (!df.isEmpty)
-            PartitionedWriter.append(df, s"$warehouseDir/bronze_$src",
-              "event_ts", Seq("event_ts", "event_id"))
-        } finally cached.unpersist()
-        ()
-      }
-      .start()
+    BatchSink.start(raw, checkpointDir, trigger) { (batch, _) =>
+      val cached = batch.cache()
+      try Bronze.route(cached).foreach { case (src, df) =>
+        if (!df.isEmpty)
+          PartitionedWriter.append(df, s"$warehouseDir/bronze_$src",
+            "event_ts", Seq("event_ts", "event_id"))
+      } finally cached.unpersist()
+      ()
+    }
 }

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{Curation, LshIndex}
+import graft.core.BatchSink
+import graft.operators.Curation
 
 /** Per-micro-batch data cards: every arriving batch lands its
   * per-source governance summary ([[Curation.dataCard]] — doc/token
@@ -14,34 +14,22 @@ import graft.operators.{Curation, LshIndex}
   * rate measures duplication WITHIN the arriving slice (cross-batch
   * dedup is [[DedupStream]]'s job against its persisted index).
   *
-  * Sink discipline matches [[DriftStream]]: cards are partitioned by
-  * batch id with dynamic overwrite, so an at-least-once replay
-  * rewrites its own rows idempotently. Empty batches write nothing. */
+  * Replay: [[graft.core.BatchSink]]. Empty batches write nothing. */
 object CardStream {
-
-  private val BatchCol = LshIndex.BatchCol
 
   /** One micro-batch → its per-source card rows. Public so tests and
     * batch backfill audits drive the exact foreachBatch body. */
   def processBatch(batch: DataFrame, batchId: Long, groupCol: String,
       textCol: String, cardsPath: String): Unit = {
     if (!batch.isEmpty)
-      Curation.dataCard(batch, groupCol, textCol)
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(cardsPath)
+      BatchSink.write(Curation.dataCard(batch, groupCol, textCol), batchId,
+        cardsPath)
   }
 
   def start(docs: DataFrame, groupCol: String, textCol: String,
       cardsPath: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, groupCol, textCol, cardsPath)
-      }
-      .start()
+    BatchSink.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, groupCol, textCol, cardsPath)
+    }
 }

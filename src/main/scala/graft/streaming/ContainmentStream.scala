@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.BatchCompaction
+import graft.core.{BatchCompaction, BatchSink}
 import graft.operators.ContainmentIndex
 
 /** Continuous doc-inside-doc detection — [[DedupStream]]'s shape for
@@ -20,16 +19,13 @@ import graft.operators.ContainmentIndex
   * Outputs (id_a ∈ batch, id_b, containment ≥ threshold) to
   * `pairsPath`, `__batch_id`-partitioned.
   *
-  * Replay safety is the [[DedupStream]] contract verbatim: foreachBatch
-  * is at-least-once; all sinks (pairs here, postings/docs inside
-  * [[ContainmentIndex.append]]) rewrite their own batch partition via
-  * dynamic partition overwrite, and the probe's (gram, id)/(id)
+  * Replay safety is the [[DedupStream]] contract verbatim: all sinks
+  * (pairs here, postings/docs inside [[ContainmentIndex.append]]) go
+  * through [[graft.core.BatchSink]], and the probe's (gram, id)/(id)
   * collapses make a batch that is already indexed count once, so the
   * re-probe emits the same pair set the overwrite then replaces
   * in place (IndexAppendCrashSpec covers the torn two-table state). */
 object ContainmentStream {
-
-  private val BatchCol = ContainmentIndex.BatchCol
 
   /** One micro-batch: probe against history (plus itself), persist the
     * pairs, append the batch — idempotent on `batchId`. Public so tests
@@ -57,12 +53,7 @@ object ContainmentStream {
         graft.operators.Dedup.selfContainmentPairs(batch, textCol, idCol,
           sn, threshold, maxDf)
       }
-    pairs
-      .withColumn(BatchCol, lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BatchCol)
-      .parquet(pairsPath)
+    BatchSink.write(pairs, batchId, pairsPath)
     ContainmentIndex.append(batch, textCol, idCol, indexPath, batchId,
       sn, nb)
   }
@@ -83,12 +74,8 @@ object ContainmentStream {
       threshold: Double = 0.9, maxDf: Int = 64, shingleN: Int = 4,
       numBuckets: Int = ContainmentIndex.DefaultNumBuckets,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, textCol, idCol, indexPath, pairsPath,
-          threshold, maxDf, shingleN, numBuckets)
-      }
-      .start()
+    BatchSink.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, textCol, idCol, indexPath, pairsPath,
+        threshold, maxDf, shingleN, numBuckets)
+    }
 }

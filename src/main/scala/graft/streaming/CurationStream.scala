@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.BatchCompaction
+import graft.core.{BatchCompaction, BatchSink}
 import graft.functions.TextFunctions
-import graft.operators.{LshIndex, NgramLm}
+import graft.operators.NgramLm
 
 /** Streaming quality-filter front door for a training-data pipeline:
   * each arriving micro-batch of documents is language-identified,
@@ -22,10 +22,7 @@ import graft.operators.{LshIndex, NgramLm}
   * `reject_reason` so the reject stream doubles as a quality-drift
   * monitor feed.
   *
-  * Sink discipline is the same as [[DedupStream]]: foreachBatch is
-  * at-least-once, so both sinks are `__batch_id`-partitioned with
-  * dynamic partition overwrite — a replayed batch rewrites its own
-  * partition in place instead of appending a second copy (the spec
+  * Replay: both sinks go through [[graft.core.BatchSink]] (the spec
   * replays a batch and asserts both sinks unchanged). Run
   * [[compactSinks]] on a maintenance cadence to bound the partition
   * count.
@@ -40,8 +37,6 @@ import graft.operators.{LshIndex, NgramLm}
   * inside a micro-batch — caching there leaks blocks across batches.)
   */
 object CurationStream {
-
-  private val BatchCol = LshIndex.BatchCol
 
   /** Enrich with (lang, quality, gopher signals) + redacted text and
     * mark acceptance: accepted ⇔ gopher pass ∧ quality ≥ minQuality ∧
@@ -157,15 +152,10 @@ object CurationStream {
       minQuality: Double = 0.3, langs: Set[String] = Set("en"),
       lm: Option[DataFrame] = None, maxNllBits: Double = 12.0): Unit = {
     val curated = curate(batch, textCol, minQuality, langs, lm, maxNllBits)
-    def write(df: DataFrame, path: String): Unit =
-      df.withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(path)
-    write(curated.filter(col("accepted"))
-      .drop("accepted", "reject_reason", "gopher_pass"), acceptPath)
-    write(curated.filter(!col("accepted")).drop("accepted"), rejectPath)
+    BatchSink.write(curated.filter(col("accepted"))
+      .drop("accepted", "reject_reason", "gopher_pass"), batchId, acceptPath)
+    BatchSink.write(curated.filter(!col("accepted")).drop("accepted"),
+      batchId, rejectPath)
   }
 
   /** Fold old batch partitions of both sinks — see
@@ -182,12 +172,8 @@ object CurationStream {
       minQuality: Double = 0.3, langs: Set[String] = Set("en"),
       lm: Option[DataFrame] = None, maxNllBits: Double = 12.0,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, textCol, acceptPath, rejectPath,
-          minQuality, langs, lm, maxNllBits)
-      }
-      .start()
+    BatchSink.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, textCol, acceptPath, rejectPath,
+        minQuality, langs, lm, maxNllBits)
+    }
 }

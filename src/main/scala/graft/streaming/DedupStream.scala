@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.BatchCompaction
+import graft.core.{BatchCompaction, BatchSink}
 import graft.operators.{Dedup, LshIndex}
 
 /** Continuous near-dup detection: each micro-batch of documents is
@@ -20,13 +20,10 @@ import graft.operators.{Dedup, LshIndex}
   * Outputs duplicate pairs (id_a, id_b, jaccard ≥ threshold) to
   * `pairsPath`.
   *
-  * Replay safety: foreachBatch is at-least-once — a crash after the
-  * writes but before the checkpoint commit re-runs the SAME batch id.
-  * All sinks (pairs here, members/grams inside [[LshIndex.append]])
-  * are `__batch_id`-partitioned with dynamic partition overwrite: a
-  * replay rewrites its own partition instead of appending a second
-  * copy, so the "index accumulates each doc exactly once" invariant
-  * survives failure-replay, not just clean runs. (The replayed probe
+  * Replay safety: all sinks (pairs here, members/grams inside
+  * [[LshIndex.append]]) go through [[graft.core.BatchSink]], so the
+  * "index accumulates each doc exactly once" invariant survives
+  * failure-replay, not just clean runs. (The replayed probe
   * sees its own docs already indexed; the self-pair guard and pair
   * normalization in [[Dedup.incrementalPairs]] make that re-probe emit
   * the same pair set, which the overwrite then replaces in place.)
@@ -42,8 +39,6 @@ import graft.operators.{Dedup, LshIndex}
   * materializes — every batch has rows.
   */
 object DedupStream {
-
-  private val BatchCol = LshIndex.BatchCol
 
   /** One micro-batch: index, probe against history, persist both —
     * idempotent on `batchId`. Public so tests (and batch replayers)
@@ -66,13 +61,8 @@ object DedupStream {
           LshIndex.probe(newIdx, indexPath)
         else // first batch: only within-batch pairs exist
           Dedup.incrementalCandidates(newIdx, newIdx.limit(0))
-      candidates
-        .filter(col("jaccard") >= threshold)
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(pairsPath)
+      BatchSink.write(candidates.filter(col("jaccard") >= threshold),
+        batchId, pairsPath)
       LshIndex.append(newIdx, indexPath, batchId, nb)
     } finally { newIdx.unpersist(); () }
   }
@@ -94,12 +84,8 @@ object DedupStream {
       indexPath: String, pairsPath: String, checkpointDir: String,
       threshold: Double = 0.8, numBuckets: Int = 256,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, textCol, idCol, indexPath, pairsPath,
-          threshold, numBuckets)
-      }
-      .start()
+    BatchSink.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, textCol, idCol, indexPath, pairsPath,
+        threshold, numBuckets)
+    }
 }

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{Curation, LshIndex}
+import graft.core.BatchSink
+import graft.operators.Curation
 
 /** Streaming domain/source-tier monitor — the continuous feed of the
   * [[graft.operators.Curation.groupGate]] curation gate: every
@@ -18,42 +19,28 @@ import graft.operators.{Curation, LshIndex}
   * tiers are identical to the batch gate over the concatenated log —
   * the stream≡batch contract, pinned in spec.
   *
-  * Sink discipline matches the counter-store siblings
-  * ([[SummingStream]]/[[PreferenceStream]]/[[RaterQaStream]]):
-  * batch-id partitions with dynamic overwrite, so an at-least-once
-  * replay rewrites its own partition instead of double-counting. */
+  * Replay: [[graft.core.BatchSink]]. */
 object DomainGateStream {
-
-  private val BatchCol = LshIndex.BatchCol
 
   /** One micro-batch → its per-group partial moment rows. Public so
     * tests and batch backfills drive the exact foreachBatch body. */
   def processBatch(batch: DataFrame, batchId: Long, groupCol: String,
       scoreCol: String, path: String): Unit = {
-    if (!batch.isEmpty) {
-      batch.select(col(groupCol).as("grp"),
+    if (!batch.isEmpty)
+      BatchSink.write(batch.select(col(groupCol).as("grp"),
           round(col(scoreCol).cast("double") * 1e6).cast("long").as("u"))
         .filter(col("grp").isNotNull && col("u").isNotNull)
         .groupBy("grp")
-        .agg(count(lit(1)).as("n_docs"), sum("u").as("sum_micro"))
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(s"$path/moments")
-    }
+        .agg(count(lit(1)).as("n_docs"), sum("u").as("sum_micro")),
+        batchId, s"$path/moments")
   }
 
   def start(docs: DataFrame, groupCol: String, scoreCol: String,
       path: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, groupCol, scoreCol, path)
-      }
-      .start()
+    BatchSink.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, groupCol, scoreCol, path)
+    }
 
   /** The tier table right now — identical to the tier side of
     * [[Curation.groupGate]] over every document ever streamed. */

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import org.apache.spark.sql.GraftColumnBridge.{column => toCol, eagerExpression}
+import graft.core.BatchSink
 import graft.functions.TopKSketch
-import graft.operators.LshIndex
 
 /** Streaming heavy hitters — the third member of the counter-store
   * trio ([[SummingStream]] = additive sums, [[UniqStream]] = HLL
@@ -22,12 +22,8 @@ import graft.operators.LshIndex
   * the mergeable-summaries bound of W_total/(k+1) — any item above
   * that frequency is guaranteed present in the view.
   *
-  * Sink discipline matches the siblings: batch-id partitions with
-  * dynamic overwrite, so an at-least-once replay rewrites its own
-  * partition instead of double-counting. */
+  * Replay: [[graft.core.BatchSink]]. */
 object HeavyHittersStream {
-
-  private val BatchCol = LshIndex.BatchCol
 
   private def topKAgg(k: Int, c: Column): Column =
     toCol(TopKSketch(k, eagerExpression(c)).toAggregateExpression())
@@ -37,28 +33,19 @@ object HeavyHittersStream {
   def processBatch(batch: DataFrame, batchId: Long, keyCols: Seq[String],
       itemCol: String, k: Int, path: String): Unit = {
     if (!batch.isEmpty)
-      batch.groupBy(keyCols.map(col): _*)
+      BatchSink.write(batch.groupBy(keyCols.map(col): _*)
         .agg(topKAgg(k, col(itemCol)).as("__tk"))
         .select(keyCols.map(col) :+ explode(col("__tk")).as("e"): _*)
         .select(keyCols.map(col) :+ col("e.item").as("item") :+
-          col("e.est").as("est"): _*)
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(path)
+          col("e.est").as("est"): _*), batchId, path)
   }
 
   def start(events: DataFrame, keyCols: Seq[String], itemCol: String,
       k: Int, path: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, keyCols, itemCol, k, path)
-      }
-      .start()
+    BatchSink.start(events, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, keyCols, itemCol, k, path)
+    }
 
   /** Reader fold: sum each item's stored estimates per key, keep the
     * k heaviest (est desc, item asc — deterministic).

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import org.apache.spark.sql.GraftColumnBridge.{column => toCol, eagerExpression}
+import graft.core.BatchSink
 import graft.functions.{HistMerge, HistogramSketch}
-import graft.operators.LshIndex
 
 /** Streaming distribution monitors — the continuous feed of the
   * histogram-state pattern ([[graft.functions.HistogramSketch]]),
@@ -17,19 +17,14 @@ import graft.operators.LshIndex
   * off them ([[graft.functions.HistogramOps.histQuantile]]) — raw
   * measures never persist.
   *
-  * Sink discipline matches [[UniqStream]]/[[SummingStream]]: states
-  * are partitioned by batch id with dynamic overwrite, so an
-  * at-least-once replay rewrites its own partition instead of
-  * double-landing. Unlike HLL merge, histogram merge is ADDITIVE
-  * (a duplicated state row double-counts) — the batch-partitioned
+  * Replay: [[graft.core.BatchSink]]. Unlike HLL merge, histogram
+  * merge is ADDITIVE (a duplicated state row double-counts), so the
   * sink is the replay guarantee here, exactly as for the Summing
   * counters. [[graft.core.BatchCompaction]] folds old batch
   * partitions; [[histView]] answers are invariant to that folding
   * in the exact regime and remain valid sketches in the compressed
   * one. */
 object HistStream {
-
-  private val BatchCol = LshIndex.BatchCol
 
   private def sketchAgg(nbins: Int, c: Column): Column =
     toCol(HistogramSketch(nbins, eagerExpression(c)).toAggregateExpression())
@@ -42,25 +37,16 @@ object HistStream {
   def processBatch(batch: DataFrame, batchId: Long, keyCols: Seq[String],
       valueCol: String, path: String, nbins: Int): Unit = {
     if (!batch.isEmpty)
-      batch.groupBy(keyCols.map(col): _*)
-        .agg(sketchAgg(nbins, col(valueCol)).as("hist_state"))
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(path)
+      BatchSink.write(batch.groupBy(keyCols.map(col): _*)
+        .agg(sketchAgg(nbins, col(valueCol)).as("hist_state")), batchId, path)
   }
 
   def start(events: DataFrame, keyCols: Seq[String], valueCol: String,
       path: String, checkpointDir: String, nbins: Int = 64,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, keyCols, valueCol, path, nbins)
-      }
-      .start()
+    BatchSink.start(events, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, keyCols, valueCol, path, nbins)
+    }
 
   /** Reader fold: merge every stored state per key. Output:
     * keyCols :+ `hist` (array<struct<centroid, cnt>>). */

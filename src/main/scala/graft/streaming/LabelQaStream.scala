@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{LshIndex, Stats}
+import graft.core.BatchSink
+import graft.operators.Stats
 
 /** Streaming label-quality monitor — the continuous feed of the
   * [[graft.operators.Stats.fleissKappa]]/[[graft.operators.Stats.ratingDisagreement]]
@@ -17,38 +18,26 @@ import graft.operators.{LshIndex, Stats}
   * ratings log — an annotation campaign watches its agreement drop
   * live without ever re-scanning raw ratings.
   *
-  * Sink discipline matches the counter-store siblings
-  * ([[SummingStream]]/[[PreferenceStream]]): batch-id partitions with
-  * dynamic overwrite, so an at-least-once replay rewrites its own
-  * partition instead of double-counting. */
+  * Replay: [[graft.core.BatchSink]]. */
 object LabelQaStream {
-
-  private val BatchCol = LshIndex.BatchCol
 
   /** One micro-batch → its per-(item, label) partial counts. Public
     * so tests and batch backfills drive the exact foreachBatch body. */
   def processBatch(batch: DataFrame, batchId: Long, itemCol: String,
       labelCol: String, path: String): Unit = {
     if (!batch.isEmpty)
-      batch.groupBy(col(itemCol).as("item"), col(labelCol).as("label"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(path)
+      BatchSink.write(
+        batch.groupBy(col(itemCol).as("item"), col(labelCol).as("label"))
+          .agg(count(lit(1)).as("n")),
+        batchId, path)
   }
 
   def start(ratings: DataFrame, itemCol: String, labelCol: String,
       path: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    ratings.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, itemCol, labelCol, path)
-      }
-      .start()
+    BatchSink.start(ratings, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, itemCol, labelCol, path)
+    }
 
   private def stored(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).select("item", "label", "n")

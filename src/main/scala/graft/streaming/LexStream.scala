@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.BatchCompaction
+import graft.core.{BatchCompaction, BatchSink}
 import graft.operators.PostingsIndex
 
 /** Continuous document ingestion into the persisted BM25 index — the
@@ -15,10 +15,9 @@ import graft.operators.PostingsIndex
   * partitions. Per-batch stats rows keep corpus df/avgdl exact without
   * ever rescanning history.
   *
-  * Replay safety: foreachBatch is at-least-once. Postings and stats
-  * are `__batch_id`-partitioned with dynamic overwrite, so a
-  * re-delivered batch (including the build batch) rewrites its own
-  * partitions and nothing else. Run [[compactSinks]] on a maintenance
+  * Replay safety: postings and stats go through
+  * [[graft.core.BatchSink]], so a re-delivered batch (including the
+  * build batch) rewrites its own partitions and nothing else. Run [[compactSinks]] on a maintenance
   * cadence to fold old postings partitions; queries collapse
   * duplicates per (term, id), so compaction crash leftovers cannot
   * change results. `stats/` is deliberately NOT compacted: its rows
@@ -53,11 +52,7 @@ object LexStream {
   def start(docs: DataFrame, indexPath: String, checkpointDir: String,
       parts: Int, textCol: String = "text", idCol: String = "doc_id",
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexPath, parts, textCol, idCol)
-      }
-      .start()
+    BatchSink.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, indexPath, parts, textCol, idCol)
+    }
 }

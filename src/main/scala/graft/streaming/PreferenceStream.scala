@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{LshIndex, Preference}
+import graft.core.BatchSink
+import graft.operators.Preference
 
 /** Streaming preference leaderboard — the continuous feed of the
   * [[graft.operators.Preference]] Bradley-Terry fit: every micro-batch
@@ -18,41 +19,27 @@ import graft.operators.{LshIndex, Preference}
   * concatenated comparison log — the stream≡batch contract, pinned in
   * spec.
   *
-  * Sink discipline matches the counter-store siblings
-  * ([[SummingStream]]/[[UniqStream]]/[[HeavyHittersStream]]): partials
-  * are partitioned by batch id with dynamic overwrite, so an
-  * at-least-once replay rewrites its own partition instead of
-  * double-counting. [[graft.core.BatchCompaction]] folds old batch
+  * Replay: [[graft.core.BatchSink]]. [[graft.core.BatchCompaction]]
+  * folds old batch
   * partitions; the summed fold is invariant to it. */
 object PreferenceStream {
-
-  private val BatchCol = LshIndex.BatchCol
 
   /** One micro-batch → its per-pair partial counts. Public so tests
     * and batch backfills drive the exact foreachBatch body. */
   def processBatch(batch: DataFrame, batchId: Long, winnerCol: String,
       loserCol: String, path: String): Unit = {
     if (!batch.isEmpty)
-      batch.groupBy(col(winnerCol).cast("string").as("i"),
+      BatchSink.write(batch.groupBy(col(winnerCol).cast("string").as("i"),
           col(loserCol).cast("string").as("j"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(path)
+        .agg(count(lit(1)).as("n")), batchId, path)
   }
 
   def start(comparisons: DataFrame, winnerCol: String, loserCol: String,
       path: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    comparisons.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, winnerCol, loserCol, path)
-      }
-      .start()
+    BatchSink.start(comparisons, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, winnerCol, loserCol, path)
+    }
 
   /** Reader fold + fit: sum the stored partial pair counts and run
     * the exact MM iterations — (item, wins, comparisons, score_ppm),

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{LshIndex, Stats}
+import graft.core.BatchSink
+import graft.operators.Stats
 
 /** Streaming per-rater quality monitor — the continuous feed of the
   * [[graft.operators.Stats.raterConsensusKappa]] and
@@ -20,13 +21,8 @@ import graft.operators.{LshIndex, Stats}
   * operators over the concatenated log — the stream≡batch contract,
   * pinned in spec.
   *
-  * Sink discipline matches the counter-store siblings
-  * ([[SummingStream]]/[[PreferenceStream]]/[[LabelQaStream]]):
-  * batch-id partitions with dynamic overwrite, so an at-least-once
-  * replay rewrites its own partition instead of double-counting. */
+  * Replay: [[graft.core.BatchSink]]. */
 object RaterQaStream {
-
-  private val BatchCol = LshIndex.BatchCol
 
   /** One micro-batch → its per-(item, rater, label) partial cell
     * counts and per-rater partial score moments. Public so tests and
@@ -35,24 +31,15 @@ object RaterQaStream {
       raterCol: String, labelCol: String, scoreCol: String,
       path: String): Unit = {
     if (!batch.isEmpty) {
-      batch.groupBy(col(itemCol).as("item"), col(raterCol).as("rater"),
-          col(labelCol).as("label"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(s"$path/cells")
-      batch.select(col(raterCol).as("rater"),
+      BatchSink.write(batch.groupBy(col(itemCol).as("item"),
+          col(raterCol).as("rater"), col(labelCol).as("label"))
+        .agg(count(lit(1)).as("n")), batchId, s"$path/cells")
+      BatchSink.write(batch.select(col(raterCol).as("rater"),
           round(col(scoreCol).cast("double") * 1e6).cast("long").as("u"))
         .filter(col("rater").isNotNull && col("u").isNotNull)
         .groupBy("rater")
-        .agg(count(lit(1)).as("n_ratings"), sum("u").as("su"))
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(s"$path/moments")
+        .agg(count(lit(1)).as("n_ratings"), sum("u").as("su")),
+        batchId, s"$path/moments")
     }
   }
 
@@ -60,14 +47,10 @@ object RaterQaStream {
       labelCol: String, scoreCol: String, path: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    ratings.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, itemCol, raterCol, labelCol,
-          scoreCol, path)
-      }
-      .start()
+    BatchSink.start(ratings, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, itemCol, raterCol, labelCol,
+        scoreCol, path)
+    }
 
   /** Per-rater kappa vs consensus right now — identical to
     * [[Stats.raterConsensusKappa]] over every rating ever streamed. */

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{LshIndex, Summing}
+import graft.core.BatchSink
+import graft.operators.Summing
 
 /** Streaming counter tables — the continuous feed of a
   * [[graft.operators.Summing]] store, the reference family's
@@ -13,11 +13,8 @@ import graft.operators.{LshIndex, Summing}
   * possible write — no read-modify-write, no state store) and readers
   * fold with [[Summing.summedView]] at any time.
   *
-  * Sink discipline matches [[CardStream]]/[[DriftStream]]: partials
-  * are partitioned by batch id with dynamic overwrite, so an
-  * at-least-once replay rewrites its own partition instead of
-  * double-counting — the additive table stays exactly-once without
-  * any dedup state. Compaction for THIS store is
+  * Replay: [[graft.core.BatchSink]] — the additive table stays
+  * exactly-once without any dedup state. Compaction for THIS store is
   * [[graft.core.BatchCompaction]] (it folds batch-id partitions);
   * [[Summing.merge]] does NOT apply here — it requires the
   * [[graft.core.PartitionedWriter]] date-partitioned layout plus a
@@ -25,29 +22,19 @@ import graft.operators.{LshIndex, Summing}
   * The summed view is invariant to BatchCompaction folding. */
 object SummingStream {
 
-  private val BatchCol = LshIndex.BatchCol
-
   /** One micro-batch → its per-key partial sums. Public so tests and
     * batch backfills drive the exact foreachBatch body. */
   def processBatch(batch: DataFrame, batchId: Long, keyCols: Seq[String],
       measureCols: Seq[String], path: String): Unit = {
     if (!batch.isEmpty)
-      Summing.summedView(batch, keyCols, measureCols)
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(path)
+      BatchSink.write(Summing.summedView(batch, keyCols, measureCols),
+        batchId, path)
   }
 
   def start(events: DataFrame, keyCols: Seq[String],
       measureCols: Seq[String], path: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, keyCols, measureCols, path)
-      }
-      .start()
+    BatchSink.start(events, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, keyCols, measureCols, path)
+    }
 }

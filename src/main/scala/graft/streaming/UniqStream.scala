@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import org.apache.spark.sql.GraftColumnBridge.{column => toCol, eagerExpression}
+import graft.core.BatchSink
 import graft.functions.{HllMergeAgg, HllSketchAgg, HllEstimate}
-import graft.operators.LshIndex
 
 /** Streaming distinct counters — the continuous feed of the HLL
   * state-store pattern ([[graft.functions.Hll]]), the family's
@@ -16,16 +16,12 @@ import graft.operators.LshIndex
   * thousand-event one), readers merge+estimate at any time with
   * [[uniqView]], and the raw ids never persist anywhere.
   *
-  * Sink discipline matches [[SummingStream]]: states are partitioned
-  * by batch id with dynamic overwrite, so an at-least-once replay
-  * rewrites its own partition instead of double-landing — and unlike
-  * additive counters, HLL merge is IDEMPOTENT (per-register max), so
-  * even a duplicated state row cannot inflate the estimate.
+  * Replay: [[graft.core.BatchSink]] — and unlike additive counters,
+  * HLL merge is IDEMPOTENT (per-register max), so even a duplicated
+  * state row cannot inflate the estimate.
   * [[graft.core.BatchCompaction]] folds old batch partitions;
   * [[uniqView]] is invariant to that folding. */
 object UniqStream {
-
-  private val BatchCol = LshIndex.BatchCol
 
   private def sketchAgg(c: Column): Column =
     toCol(HllSketchAgg(eagerExpression(c)).toAggregateExpression())
@@ -41,25 +37,16 @@ object UniqStream {
   def processBatch(batch: DataFrame, batchId: Long, keyCols: Seq[String],
       valueCol: String, path: String): Unit = {
     if (!batch.isEmpty)
-      batch.groupBy(keyCols.map(col): _*)
-        .agg(sketchAgg(col(valueCol)).as("hll_state"))
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol)
-        .parquet(path)
+      BatchSink.write(batch.groupBy(keyCols.map(col): _*)
+        .agg(sketchAgg(col(valueCol)).as("hll_state")), batchId, path)
   }
 
   def start(events: DataFrame, keyCols: Seq[String], valueCol: String,
       path: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, keyCols, valueCol, path)
-      }
-      .start()
+    BatchSink.start(events, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, keyCols, valueCol, path)
+    }
 
   /** Reader fold: merge every stored state per key, estimate once.
     * Output: keyCols :+ `uniq_est`. */

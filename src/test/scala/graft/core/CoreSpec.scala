@@ -79,6 +79,17 @@ class CoreSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 3)
   }
 
+  test("PartitionedWriter appendIfAbsent lands a within-batch duplicate once") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_pawd").toString + "/t"
+    // an at-least-once redelivery inside one batch: the same line twice
+    val row = ("e1", java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1.0)
+    val df = Seq(row, row).toDF("event_id", "event_ts", "v")
+    assert(PartitionedWriter.appendIfAbsent(df, dir, "event_ts",
+      Seq("event_id", "event_ts")) == 1L)
+    assert(spark.read.parquet(dir).count() == 1)
+  }
+
   test("compactPartitions folds per-append files, content and idempotency intact") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
