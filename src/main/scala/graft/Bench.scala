@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs the full query suite against
   * SPARK_GRAFT_SF_DIR (default sf0.1), fully materializing each result
@@ -87,7 +89,6 @@ object Bench {
       var size = taskMs.size
       while (size != last) { last = size; Thread.sleep(200); size = taskMs.size }
       spark.sparkContext.removeSparkListener(tl)
-      import scala.jdk.CollectionConverters._
       val ds = taskMs.asScala.map(_.toLong).toSeq.sorted
       val mx = ds.lastOption.getOrElse(0L) / 1000.0
       val md = if (ds.isEmpty) 0.0 else ds(ds.size / 2) / 1000.0
@@ -148,21 +149,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val nCpu = cpus.toInt
+    val nCpu = core.GraftSession.defaultCpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf, must be set at build: the e2e BI round-trip's JDBC
-      // sessions share this session's temp-view catalog (the
-      // GraftSession production posture)
-      .config("spark.sql.hive.thriftServer.singleSession", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.GraftSession.local(nCpu)
 
     // one warm-up action so JVM/codegen startup isn't billed to query 1.
     // A FIXED cheap query (not Map hash order, which could hand back a
@@ -1382,7 +1371,7 @@ object Bench {
     val skewRows = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "20000000").toLong
     val skew: String =
       if (only.isDefined || skewRows <= 0) ""
-      else try skewRehearsal(spark, skewRows, cpus.toInt)
+      else try skewRehearsal(spark, skewRows, nCpu)
       catch { case e: Throwable =>
         System.err.println(s"[bench] c12g skew rehearsal FAILED: ${e.getMessage}")
         ""
@@ -1437,12 +1426,17 @@ object Bench {
         }
       if (items.isEmpty) "" else s""","receipts":{${items.mkString(",")}}"""
     }
-    val envJson = {
+    val envFields = {
       val heapGb = Runtime.getRuntime.maxMemory / 1e9
-      f""","env":{"cpus":${cpus.toInt},"load_avg_start":$loadStart%.2f,"load_avg_end":$loadAvg%.2f,"gc_total_sec":$gcSecNow%.1f,"heap_max_gb":$heapGb%.1f}"""
+      f""""cpus":$nCpu,"load_avg_start":$loadStart%.2f,"load_avg_end":$loadAvg%.2f,"gc_total_sec":$gcSecNow%.1f,"heap_max_gb":$heapGb%.1f"""
     }
+    val envJson = s""","env":{$envFields}"""
+    // the full artifact also records the session confs the suite ran
+    // under; the compact line stays within its 1800-char bound
+    val sessionConfs = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(ListMap(core.GraftSession.confs: _*).asJava)
 
-    val fullJson = f"""{"metric":"suite_total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"failed_reps":$failedReps,"sf":"$sfDir","reps":$reps$stagingJson$synth$e2e$e2eStream$chain$synthEv$skew$retime$receipts$envJson}"""
+    val fullJson = f"""{"metric":"suite_total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"failed_reps":$failedReps,"sf":"$sfDir","reps":$reps$stagingJson$synth$e2e$e2eStream$chain$synthEv$skew$retime$receipts,"env":{$envFields,"session_confs":$sessionConfs}}"""
     // The driver's bench capture keeps only the LAST ~2000 chars of stdout;
     // a 7 KB line gets its head truncated and can never parse (rounds 1-5
     // recorded parsed:null). Full artifact goes to a file + stderr; stdout

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{Decimal, DoubleType, FloatType, IntegerType, LongType}
@@ -14,10 +14,9 @@ import graft.core.Keys
   * its SQL users (every reference query is plain SQL; a user switching
   * engines shouldn't have to leave SQL to reach these).
   *
-  * Two entry points:
-  *  - config: `spark.sql.extensions=graft.GraftExtensions` (or
-  *    `SparkSession.builder.withExtensions(new GraftExtensions)`);
-  *  - programmatic: [[GraftExtensions.register]] on a live session.
+  * [[graft.core.GraftSession]] injects them into every session it
+  * builds; a session built elsewhere gets them with
+  * `spark.sql.extensions=graft.GraftExtensions`.
   *
   * Every function resolves to the same Catalyst expression trees the
   * DataFrame API builds (native codegen expressions or builtin
@@ -375,12 +374,5 @@ object GraftExtensions {
     builders.map { case (name, b) =>
       (FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getCanonicalName, name), b)
-    }
-
-  /** Register every function on an already-built session (tests, REPLs,
-    * sessions whose builder the caller doesn't own). */
-  def register(spark: SparkSession): Unit =
-    descriptions.foreach { case (id, info, b) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, b)
     }
 }

@@ -2,70 +2,71 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's scale-oriented defaults.
+/** The one session factory: every entry point (the mains, the bench,
+  * the oracle dump, the benchmark harness and the specs) builds its
+  * `SparkSession` here, so the engine the specs test is the one that
+  * is verified, benchmarked and served.
   *
   * The reference delegates physical execution entirely to ClickHouse
-  * (SURVEY.md §4); on Spark the equivalent "engine defaults" are AQE
-  * (runtime re-plan, skew-join splitting, partition coalescing) and a
-  * shuffle-partition count sized to the cluster rather than the 200
-  * default. Timezone: the reference pins Asia/Jakarta for stored event
-  * time (/root/reference/scripts/alter_bronze_timezone_asia_jakarta.sql);
-  * here it is an explicit parameter, defaulting to UTC so nothing
-  * depends on ambient machine state.
+  * under one server config (SURVEY.md §4); on Spark the equivalent
+  * "engine defaults" are AQE (runtime re-plan, skew-join splitting,
+  * partition coalescing — all Spark 4.1 defaults, pinned by CoreSpec)
+  * plus the non-default confs in [[confs]], the engine's SQL surface
+  * ([[graft.GraftExtensions]]: functions and the projection rewrite)
+  * and a shuffle-partition count sized to the cores rather than the
+  * 200 default.
   */
 object GraftSession {
 
-  def builder(
-      appName: String = "graft",
-      master: Option[String] = None,
-      shufflePartitions: Int = 32,
-      timeZone: String = "UTC"): SparkSession.Builder = {
-    val b = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", timeZone)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Idempotent re-runs overwrite only the partitions they touch
-      // (MERGE-emulation per SURVEY.md §4 "MERGE upsert").
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      // ns-timestamp parquet (driver events table) reads as long.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Codegen class cache (static conf, default 100 entries): a
-      // workload with more than ~100 distinct codegen units — any
-      // multi-operator pipeline, or one wide query re-planned by AQE —
-      // evicts in a loop, and every re-run RECOMPILES plans it already
-      // compiled. Stack-sampling the probe family at local[32] showed
-      // executor tasks blocked on the compile KeyLock in EVERY rep
-      // (CodeGenerator.compile behind NonFateSharingLoadingCache.get),
-      // and raising the bound cut the l11x bench family ~13% with the
-      // recompile stalls gone. The entries are compiled classes
-      // (metaspace), so the bound stays finite; override via
-      // -Dspark.sql.codegen.cache.maxEntries for constrained drivers.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.props.getOrElse("spark.sql.codegen.cache.maxEntries", "8192"))
-      // BI endpoint (queries.BiServer): every Thrift JDBC session shares
-      // this session's catalog, so the registered gold views are what a
-      // BI tool sees — one warehouse, one read surface, same as the
-      // reference's single ClickHouse endpoint. Static conf: must be
-      // set at build time, not after (BiServer falls back to
-      // global_temp views when attached to a foreign session).
-      .config("spark.sql.hive.thriftServer.singleSession", "true")
-    master.fold(b)(b.master)
-  }
+  /** Cores for `local[n]` and the shuffle width: `SPARK_GRAFT_CPUS`,
+    * else every core the JVM sees. */
+  val defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
 
-  def local(cpus: Int = 4, timeZone: String = "UTC"): SparkSession = {
-    // dev/bench knob: decouple shuffle width from the core count (the
-    // two are conflated by default) so partitioning experiments don't
-    // need a code edit; production callers size shufflePartitions via
-    // [[builder]] directly.
-    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE")
-      .map(_.toInt).getOrElse(cpus)
-    val s = builder(master = Some(s"local[$cpus]"),
-      shufflePartitions = shuffle, timeZone = timeZone)
-      .config("spark.ui.enabled", "false")
+  /** Every non-default conf the factory sets, in build order (the bench
+    * records this list in BENCH_FULL.json's `env` block). */
+  val confs: Seq[(String, String)] = Seq(
+    // the reference pins Asia/Jakarta for stored event time (its
+    // alter_bronze_timezone_asia_jakarta.sql); here Jakarta semantics
+    // are an explicit parameter of the SIEM code and the session is
+    // UTC, so nothing depends on the machine's zone
+    "spark.sql.session.timeZone" -> "UTC",
+    // Idempotent re-runs overwrite only the partitions they touch
+    // (MERGE-emulation per SURVEY.md §4 "MERGE upsert").
+    "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
+    // ns-timestamp parquet (one testdata events-table variant) reads as
+    // long; Tables.load normalizes it to TimestampType.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // Codegen class cache (static conf, default 100 entries): a
+    // workload with more than ~100 distinct codegen units — any
+    // multi-operator pipeline, or one wide query re-planned by AQE —
+    // evicts in a loop, and every re-run RECOMPILES plans it already
+    // compiled. Stack-sampling the probe family at local[32] showed
+    // executor tasks blocked on the compile KeyLock in EVERY rep
+    // (CodeGenerator.compile behind NonFateSharingLoadingCache.get),
+    // and raising the bound cut the l11x bench family ~13% with the
+    // recompile stalls gone. The entries are compiled classes
+    // (metaspace), so the bound stays finite; override via
+    // -Dspark.sql.codegen.cache.maxEntries for constrained drivers.
+    "spark.sql.codegen.cache.maxEntries" ->
+      sys.props.getOrElse("spark.sql.codegen.cache.maxEntries", "8192"),
+    // BI endpoint (queries.BiServer): every Thrift JDBC session shares
+    // this session's catalog, so the registered gold views are what a
+    // BI tool sees — one warehouse, one read surface, same as the
+    // reference's single ClickHouse endpoint. Static conf: must be
+    // set at build time, not after (BiServer falls back to
+    // global_temp views when attached to a foreign session).
+    "spark.sql.hive.thriftServer.singleSession" -> "true",
+    // local runs serve no web UI (and bind no UI port)
+    "spark.ui.enabled" -> "false")
+
+  def local(cpus: Int = defaultCpus): SparkSession = {
+    val s = SparkSession.builder()
+      .withExtensions(new graft.GraftExtensions)
+      .appName("graft")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config(confs.toMap)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -18,9 +18,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  /** Read one table from an sf directory. Idempotent wrt session confs. */
+  /** Read one table from an sf directory. Sets no conf: the `nanosAsLong`
+    * read of the ns variant comes from [[GraftSession]]. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     name match {
       case "events" =>

@@ -74,10 +74,11 @@ object Projections {
   private[plans] def normalize(p: String): String =
     new org.apache.hadoop.fs.Path(p).toUri.getPath
 
-  /** Register (or replace) the projection for `basePath` and arm the
-    * rewrite rule on the session. Call after materializing the
-    * summary; keep the summary fresh by appending per-batch partials
-    * exactly as [[graft.operators.Summing.appendPartials]] does.
+  /** Register (or replace) the projection for `basePath`; the rewrite
+    * rule is already in every [[graft.core.GraftSession]] session (via
+    * [[graft.GraftExtensions]]). Call after materializing the summary;
+    * keep the summary fresh by appending per-batch partials exactly as
+    * [[graft.operators.Summing.appendPartials]] does.
     *
     * Registration validates the summary's SHAPE against the contract
     * — every key column exists, every measure and the count column
@@ -102,12 +103,6 @@ object Projections {
     registry.put(normalize(basePath),
       Projection(normalize(basePath), summaryPath, keys.toSet,
         measures.toSet, cntCol))
-    val em = spark.experimental
-    em.synchronized {
-      if (!em.extraOptimizations.exists(_.isInstanceOf[ProjectionRewrite]))
-        em.extraOptimizations =
-          em.extraOptimizations :+ ProjectionRewrite(spark)
-    }
   }
 
   def unregister(basePath: String): Unit =
@@ -121,10 +116,8 @@ object Projections {
   private[plans] def isEmpty: Boolean = registry.isEmpty
 }
 
-/** The rewrite rule. Also injectable via `spark.sql.extensions=
-  * graft.GraftExtensions` (optimizer-rule injection); the
-  * programmatic [[Projections.register]] arms it through
-  * `spark.experimental.extraOptimizations` on a live session. */
+/** The rewrite rule, injected into every session by
+  * [[graft.GraftExtensions]]. */
 case class ProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =

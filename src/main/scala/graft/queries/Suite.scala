@@ -6802,7 +6802,6 @@ object Suite {
         // engine family's native windowFunnel shape) — same
         // earliest-first semantics as the h9 operator, exercised
         // through the extension registry and a real partial-agg plan
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT user_id,
                  |  window_funnel(604800L, ts,
@@ -7237,7 +7236,6 @@ object Suite {
       (s, d) => {
         // retention as a one-long-bitmask SQL aggregate; flags
         // unpacked to columns so the gate compares plain ints
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT user_id, r[0] AS r1, r[1] AS r2,
                  |  r[2] AS r3, r[3] AS r4 FROM (
@@ -7279,7 +7277,6 @@ object Suite {
       (s, d) => {
         // existential ordered-pair aggregate (the HAVING-filter form;
         // the h11 operator is the latest-predecessor counting form)
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT user_id,
                  |  CAST(sequence_match(1800L, ts,
@@ -7782,7 +7779,6 @@ object Suite {
         // Misra-Gries heavy hitters on the SQL surface; with distinct
         // values <= k the summary is exact, so the oracle replays it
         // as plain GROUP BY counts (the sketchy regime is spec-pinned)
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT item AS event_type, est AS n
                  |FROM (SELECT top_k_sketch(8, event_type) AS a
@@ -7797,7 +7793,6 @@ object Suite {
       (s, d) => {
         // saturating distinct: exact below the cap, n+1 above — the
         // per-day user counts straddle 130 so both regimes execute
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT date_format(ts, 'yyyy-MM-dd') AS day,
                  |  uniq_up_to(130, user_id) AS u
@@ -7814,7 +7809,6 @@ object Suite {
         // compression fires and the sketch IS the value-grain GROUP
         // BY (exact regime, HistogramSketch scaladoc) — the adaptive
         // regime's invariants are spec-pinned (HistogramSketchSpec).
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT event_type,
                  |  CAST(centroid AS BIGINT) AS k, cnt
@@ -7841,7 +7835,6 @@ object Suite {
         // rule (cum·den ≥ W·num over exact longs), which is what the
         // oracle replays; compressed-regime monotonicity is
         // spec-pinned (HistogramSketchSpec).
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT event_type,
                  |  hist_quantile(h, 1, 4) AS p25,
@@ -7964,7 +7957,6 @@ object Suite {
         // type at read, estimate pinned inside the sketch's error
         // band of the oracled exact count — at 100 TB the daily
         // states are all that's ever re-read
-        graft.GraftExtensions.register(s)
         // events only (not registerAll): the synth growth rehearsal
         // points this query at a dir that materializes just events
         t(s, d, "events").createOrReplaceTempView("events")
@@ -8003,7 +7995,6 @@ object Suite {
         // the 3 single-set ~1% errors but DIVIDES by the overlap
         // size, so the band is 10% here (view∩click covers most
         // users in this corpus — the amplification stays small).
-        graft.GraftExtensions.register(s)
         t(s, d, "events").createOrReplaceTempView("events")
         s.sql("""WITH sk AS (SELECT
                  |    hll_estimate(hll_sketch(CASE WHEN event_type =
@@ -8286,7 +8277,6 @@ object Suite {
         // algebra form — total₂ − max(0, maxₜ(C₂(t) − C₁(t⁻))) with
         // C₁ counted over STRICTLY earlier seconds — which is the
         // oracle; the aggregate's queue scan must reproduce it
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT user_id, sequence_count(ts,
                  |    event_type = 'error',
@@ -8405,7 +8395,6 @@ object Suite {
         // row count. Weights in micro-unit longs (the fixed-point
         // convention); distinct types <= k, so the summary is exact
         // and the oracle is plain weighted GROUP BY
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT item AS event_type, est AS value_micro
                  |FROM (SELECT top_k_weighted(8, event_type,
@@ -8882,7 +8871,6 @@ object Suite {
         // keeps one (key → long) map per group — state bounded by
         // distinct keys, partials combine map-side. Oracle = plain
         // exploded GROUP BY
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT bucket, key, val FROM (
                  |  SELECT user_id % 10 AS bucket,
@@ -10017,7 +10005,6 @@ object Suite {
       // (window_funnel_strict aggregate) so the extension registry and
       // partial-agg plan are on the tested path
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT user_id,
                  |  window_funnel_strict(604800L, 'order', ts,
@@ -10070,7 +10057,6 @@ object Suite {
       // purchase segment; every set-op is a two-pointer merge over
       // sorted states, and the answers are exact set cardinalities
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""WITH st AS (SELECT event_type, bitmap_agg(user_id) AS bm
                  |  FROM events GROUP BY event_type),
@@ -10117,7 +10103,6 @@ object Suite {
       // distributes over id-range shards, so recombination never
       // touches raw rows)
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""WITH wk AS (SELECT date_trunc('week', ts) AS w,
                  |    bitmap_agg(user_id) AS bm
@@ -10145,7 +10130,6 @@ object Suite {
       // recomputes the exact member set — the sample manifest is
       // auditable outside Spark
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT source, array_join(transform(
                  |    bottom_k(10, cast(conv(substring(
@@ -10303,7 +10287,6 @@ object Suite {
       // on every IEEE engine, which the recursive-CTE oracle proves
       // by replaying all 10 bisection steps
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""WITH pts AS (SELECT
                  |    ((cast(conv(substring(md5(concat('glat:',
@@ -10471,7 +10454,6 @@ object Suite {
       // greedy scan is provably wrong here); the oracle replays the
       // semantics as EXISTS-chain joins, level by level
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""SELECT user_id,
                  |  sequence_chain('21600,172800', ts,
@@ -10659,7 +10641,6 @@ object Suite {
       // suite pins (flag margin α+1e-3 absorbs the bucket-boundary
       // ulp); the exact quantiles themselves are oracled
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""WITH c AS (SELECT event_type,
                  |    cast(round(value*100) AS bigint) AS v FROM events),
@@ -10865,7 +10846,6 @@ object Suite {
       // and the p95 guarantee is pinned against the oracled exact
       // nearest-rank quantile over the same rows
       (s, d) => {
-        graft.GraftExtensions.register(s)
         Tables.registerAll(s, d)
         s.sql("""WITH c AS (SELECT event_type, to_date(ts) AS day,
                  |    cast(round(value*100) AS bigint) AS v FROM events),

@@ -18,8 +18,7 @@ import graft.pipelines.{GoldContext, Registry, TimeWindow}
 object RunPipelines {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RunPipelines WAREHOUSE_DIR [start end] [ids...]")
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = GraftSession.local()
     val ctx = new GoldContext(spark, args(0))
 
     if (args.length > 1 && args(1) == "acceptance") {

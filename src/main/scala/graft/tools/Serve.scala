@@ -17,8 +17,7 @@ object Serve {
     require(args.nonEmpty, "usage: Serve WAREHOUSE_DIR [PORT] [BIND_HOST]")
     val port = args.drop(1).headOption.map(_.toInt).getOrElse(10000)
     val bindHost = args.drop(2).headOption.getOrElse("localhost")
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = GraftSession.local()
     val ctx = new GoldContext(spark, args.head)
     BiServer.serve(ctx, port, bindHost)
     System.err.println(s"[serve] thrift endpoint on $bindHost:$port — Ctrl-C to stop")

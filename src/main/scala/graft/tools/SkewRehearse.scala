@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Isolated driver for the bench's c12g salted-skew rehearsal — lets
   * the straggler-collapse numbers be tuned/validated without a full
@@ -8,15 +8,8 @@ import org.apache.spark.sql.SparkSession
 object SkewRehearse {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(20000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(graft.Bench.skewRehearsal(spark, rows, cpus))
+    val spark = GraftSession.local()
+    println(graft.Bench.skewRehearsal(spark, rows, GraftSession.defaultCpus))
     spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.{Keys, Tables}
+import graft.core.{GraftSession, Keys, Tables}
 
 /** Tiny CLI smoke-driver: loads the driver testdata through the public
   * library API and prints a few observable results. Usage:
@@ -11,12 +11,7 @@ import graft.core.{Keys, Tables}
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     val ev = Tables.load(spark, sfDir, "events")
     ev.printSchema()

@@ -4,11 +4,10 @@ import org.apache.spark.sql.functions._
 
 /** The SQL function surface must produce the exact trees the DataFrame
   * API builds — asserted by comparing results per function — and be
-  * injectable both programmatically and via SparkSessionExtensions. */
+  * injected into the session through SparkSessionExtensions. */
 class GraftExtensionsSpec extends SparkSpec {
 
   private lazy val ready: Unit = {
-    GraftExtensions.register(spark)
     import spark.implicits._
     Seq(
       (1L, "The quick brown fox jumps over the lazy dog", "10.0.0.1",

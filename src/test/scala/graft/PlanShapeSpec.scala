@@ -496,7 +496,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("hll state flow is partial-agg all the way (no raw-id re-shuffle)") {
-    GraftExtensions.register(spark)
     core.Tables.registerAll(spark, sf)
     val df = spark.sql(
       """SELECT event_type, hll_estimate(hll_merge(st)) AS est FROM

@@ -42,9 +42,39 @@ class CoreSpec extends SparkSpec {
   }
 
   test("session default: codegen class cache sized above the eviction-thrash regime") {
-    // static conf — set at build time by GraftSession.builder; the
+    // static conf — set at build time by GraftSession.local; the
     // 100-entry default recompiles in a loop on any >100-unit workload
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt >= 8192)
+    // Spark defaults the factory relies on without restating them: a
+    // Spark upgrade that flips one fails here, not in a bench diff
+    Seq("spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.enabled",
+      "spark.sql.adaptive.skewJoin.enabled").foreach { k =>
+      assert(spark.conf.get(k) == "true", k)
+    }
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+      .equalsIgnoreCase("dynamic"))
+    assert(spark.conf.get("spark.sql.hive.thriftServer.singleSession") == "true")
+  }
+
+  test("only core/GraftSession.scala builds a SparkSession") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"${root.getAbsolutePath} not found")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val owner = new java.io.File(root, "graft/core/GraftSession.scala")
+    val hits = for {
+      f <- files(root) if f.getCanonicalPath != owner.getCanonicalPath
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String]).toSeq.zipWithIndex
+      if line.contains("SparkSession.builder")
+    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+    assert(java.nio.file.Files.readString(owner.toPath)
+      .contains("SparkSession.builder"))
   }
 
   test("Replacing.latestByKey keeps max-version row per key, deterministic ties") {

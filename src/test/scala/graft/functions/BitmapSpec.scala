@@ -14,7 +14,6 @@ class BitmapSpec extends SparkSpec {
   private val ys = (0 until 600).map(i => (i * 40503L + 11) % 263)
 
   test("set-ops match Set semantics on pseudo-random multisets") {
-    graft.GraftExtensions.register(spark)
     (xs.map(("a", _)) ++ ys.map(("b", _)))
       .toDF("seg", "id").createOrReplaceTempView("bm_rows")
     val row = spark.sql(
@@ -48,7 +47,6 @@ class BitmapSpec extends SparkSpec {
   }
 
   test("or-merge of sharded states equals the direct build; and-agg exact") {
-    graft.GraftExtensions.register(spark)
     xs.map(x => (x % 7, x)).toDF("shard", "id")
       .createOrReplaceTempView("bm_shards")
     val merged = spark.sql(

@@ -12,7 +12,6 @@ class DdSketchSpec extends SparkSpec {
   private val alpha = 0.01
 
   test("relative error bound holds across quantiles on a heavy tail") {
-    graft.GraftExtensions.register(spark)
     // log-uniform-ish positive values spanning 5 decades — the shape
     // rank-error sketches mis-serve and DDSketch is built for
     val vs = (1 to 20000).map { i =>
@@ -41,7 +40,6 @@ class DdSketchSpec extends SparkSpec {
   }
 
   test("merge is exact: sketch(A) ++ sketch(B) == sketch(A ++ B)") {
-    graft.GraftExtensions.register(spark)
     val a = (1 to 5000).map(i => ("a", (i % 997).toLong + 1))
     val b = (1 to 5000).map(i => ("b", (i % 1009).toLong * 7 + 3))
     (a ++ b).toDF("g", "v").createOrReplaceTempView("dd_m")
@@ -60,7 +58,6 @@ class DdSketchSpec extends SparkSpec {
   }
 
   test("zero and negative values land in the zero bucket; q walks past it") {
-    graft.GraftExtensions.register(spark)
     Seq(("g", -5L), ("g", 0L), ("g", 100L), ("g", 100L))
       .toDF("g", "v").createOrReplaceTempView("dd_z")
     val r = spark.sql(

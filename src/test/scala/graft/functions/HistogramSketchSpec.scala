@@ -8,7 +8,6 @@ class HistogramSketchSpec extends SparkSpec {
   import spark.implicits._
 
   private def hist(view: String, nbins: Int): Seq[(Double, Long)] = {
-    graft.GraftExtensions.register(spark)
     spark.sql(
       s"""SELECT centroid, cnt FROM (SELECT hist_sketch($nbins, v) AS h
          |FROM $view) LATERAL VIEW inline(h) t AS centroid, cnt
@@ -45,7 +44,6 @@ class HistogramSketchSpec extends SparkSpec {
       "pmod(id, 4) AS g", "CAST(pmod(hash(id), 1000) AS DOUBLE) AS v")
     df.repartition(1).createOrReplaceTempView("hs_g1")
     df.repartition(32).createOrReplaceTempView("hs_g32")
-    graft.GraftExtensions.register(spark)
     def mass(view: String): Map[Long, Long] = spark.sql(
       s"""SELECT g, aggregate(transform(h, x -> x.cnt), 0L,
          |    (a, x) -> a + x) AS n
@@ -55,7 +53,6 @@ class HistogramSketchSpec extends SparkSpec {
   }
 
   test("hist_quantile: exact regime equals the weighted-quantile rule") {
-    graft.GraftExtensions.register(spark)
     // 1..10 with weight = value: W=55, cums 1,3,6,10,15,21,28,36,45,55
     // p25 = smallest v with cum·4 ≥ 55 → 5 (15·4=60); p50 → 7 (28·2=56)
     val rows = (1 to 10).flatMap(v => Seq.fill(v)(v.toDouble))
@@ -72,7 +69,6 @@ class HistogramSketchSpec extends SparkSpec {
   }
 
   test("hist_quantile: compressed regime is monotone and in range") {
-    graft.GraftExtensions.register(spark)
     spark.range(30000)
       .selectExpr("CAST(pmod(hash(id), 10000) AS DOUBLE) AS v")
       .createOrReplaceTempView("hq_comp")

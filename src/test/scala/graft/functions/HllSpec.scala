@@ -8,7 +8,6 @@ class HllSpec extends SparkSpec {
   import spark.implicits._
 
   test("sketch is deterministic across partitionings; merge == union") {
-    graft.GraftExtensions.register(spark)
     val df = (0 until 20000).map(i => (i.toLong, i % 2)).toDF("u", "g")
     df.repartition(13).createOrReplaceTempView("hll_a")
     df.repartition(3).createOrReplaceTempView("hll_b")
@@ -28,7 +27,6 @@ class HllSpec extends SparkSpec {
   }
 
   test("estimate lands inside the p=12 error band, small and large") {
-    graft.GraftExtensions.register(spark)
     for (n <- Seq(50, 1000, 100000)) {
       (0 until n).map(i => Tuple1(s"v$i")).toDF("u")
         .createOrReplaceTempView("hll_n")
@@ -67,7 +65,6 @@ class HllSpec extends SparkSpec {
   }
 
   test("stored states round-trip through parquet and merge at read") {
-    graft.GraftExtensions.register(spark)
     val tmp = java.nio.file.Files.createTempDirectory("hll_store_").toString
     (0 until 5000).map(i => (i.toLong, s"day${i % 4}"))
       .toDF("u", "day").createOrReplaceTempView("hll_ev")
@@ -82,7 +79,6 @@ class HllSpec extends SparkSpec {
   }
 
   test("type checks: estimate/merge demand a sketch, sketch an atomic") {
-    graft.GraftExtensions.register(spark)
     Seq((1L, Array(1, 2))).toDF("u", "arr")
       .createOrReplaceTempView("hll_bad")
     val e1 = intercept[Exception](

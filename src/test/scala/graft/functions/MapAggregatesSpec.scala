@@ -11,11 +11,6 @@ class MapAggregatesSpec extends SparkSpec {
 
   import spark.implicits._
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    graft.GraftExtensions.register(spark)
-  }
-
   private def entries(r: Row): Seq[(String, Long)] =
     r.getSeq[Row](0).map(e => (e.getString(0), e.getLong(1)))
 

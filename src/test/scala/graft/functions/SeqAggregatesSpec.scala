@@ -8,7 +8,6 @@ class SeqAggregatesSpec extends SparkSpec {
   import spark.implicits._
 
   test("retention gates later flags on the cohort bit") {
-    graft.GraftExtensions.register(spark)
     val base = 1700000000L
     Seq(
       (1L, "signup", base), (1L, "buy", base + 100),
@@ -27,7 +26,6 @@ class SeqAggregatesSpec extends SparkSpec {
   }
 
   test("sequence_match is existential with gap in (0, max]") {
-    graft.GraftExtensions.register(spark)
     val base = 1700000000L
     Seq(
       (1L, "error", base), (1L, "purchase", base + 30),   // match

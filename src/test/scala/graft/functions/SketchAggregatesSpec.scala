@@ -9,7 +9,6 @@ class SketchAggregatesSpec extends SparkSpec {
   import spark.implicits._
 
   test("top_k_sketch is exact when distinct <= k, across a shuffle") {
-    graft.GraftExtensions.register(spark)
     val rows = (0 until 3000).map { i =>
       (i.toLong, Seq("a", "b", "c", "d")((i * 7) % 4))
     }
@@ -24,7 +23,6 @@ class SketchAggregatesSpec extends SparkSpec {
   }
 
   test("heavy-hitter guarantee: freq > N/(k+1) items survive any order") {
-    graft.GraftExtensions.register(spark)
     // 10 counters; one item at 40% of N, 200 distinct tail items —
     // adversarial interleaving (tail between every heavy occurrence)
     val n = 5000
@@ -48,7 +46,6 @@ class SketchAggregatesSpec extends SparkSpec {
   }
 
   test("large k stays fast: the debt offset makes decrement-all O(1)") {
-    graft.GraftExtensions.register(spark)
     // 200k rows over 50k distinct values with k = 5000 forces constant
     // counter churn: a naive decrement-all does ~1e9 counter writes
     // (minutes); the debt-offset version is one long increment per
@@ -74,7 +71,6 @@ class SketchAggregatesSpec extends SparkSpec {
   }
 
   test("uniq_up_to: exact below the cap, saturates at n+1 above") {
-    graft.GraftExtensions.register(spark)
     val rows = (0 until 4000).map(i => (i.toLong, (i % 500).toLong, s"g${i % 2}"))
     rows.toDF("id", "u", "g").repartition(8)
       .createOrReplaceTempView("uut")
@@ -95,7 +91,6 @@ class SketchAggregatesSpec extends SparkSpec {
   }
 
   test("analysis-time rejection of bad argument types") {
-    graft.GraftExtensions.register(spark)
     Seq((1L, 2.5)).toDF("id", "x").createOrReplaceTempView("bad_t")
     val e1 = intercept[Exception](
       spark.sql("SELECT top_k_sketch(4, x) FROM bad_t").collect())

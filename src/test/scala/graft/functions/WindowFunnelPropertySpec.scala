@@ -27,7 +27,6 @@ class WindowFunnelPropertySpec extends SparkSpec {
   }
 
   test("DP equals exhaustive search on 300 random keys (k=3, dense seconds)") {
-    graft.GraftExtensions.register(spark)
     val rnd = new scala.util.Random(20260814L)
     val base = 1700000000L
     val w = 40L
@@ -81,7 +80,6 @@ class WindowFunnelPropertySpec extends SparkSpec {
   }
 
   test("strict_max equals per-anchor strict walk on 400 random keys, all modes") {
-    graft.GraftExtensions.register(spark)
     val rnd = new scala.util.Random(20260815L)
     val base = 1700000000L
     val w = 40L
@@ -135,7 +133,6 @@ class WindowFunnelPropertySpec extends SparkSpec {
   }
 
   test("sequence_count equals maximum matching on 300 random keys, gapped and not") {
-    graft.GraftExtensions.register(spark)
     val rnd = new scala.util.Random(20260815L)
     val base = 1700000000L
     val gap = 25L
@@ -189,7 +186,6 @@ class WindowFunnelPropertySpec extends SparkSpec {
   }
 
   test("sequence_chain DP equals exhaustive search on 300 random keys") {
-    graft.GraftExtensions.register(spark)
     val rnd = new scala.util.Random(20260815L)
     val base = 1700000000L
     val gaps = Seq(25L, 15L)

@@ -14,7 +14,6 @@ class WindowFunnelSpec extends SparkSpec {
     }.toDF("event_id", "user_id", "event_type", "ts")
 
   test("aggregate levels equal the operator across a shuffled plan") {
-    graft.GraftExtensions.register(spark)
     val base = 1700000000L
     // deterministic pseudo-random stream over 40 users, plus hand
     // shapes: full chain, out-of-window, reversed, step-2-only
@@ -59,7 +58,6 @@ class WindowFunnelSpec extends SparkSpec {
   }
 
   test("window_funnel_max maximizes over anchors; earliest-anchor does not") {
-    graft.GraftExtensions.register(spark)
     val base = 1700000000L
     val shaped = Seq(
       // user 1: early stray view, then a complete chain 2 days later —
@@ -98,7 +96,6 @@ class WindowFunnelSpec extends SparkSpec {
   }
 
   test("strict_dedup and strict_order modes pin the family's examples") {
-    graft.GraftExtensions.register(spark)
     val base = 1700000000L
     val shaped = Seq(
       // u1: clean chain — all modes give 3

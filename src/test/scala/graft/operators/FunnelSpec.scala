@@ -152,7 +152,6 @@ class FunnelSpec extends SparkSpec {
     assert(got == Map(1L -> 3, 2L -> 1, 3L -> 3, 4L -> 1), got)
 
     // SQL surface agrees
-    graft.GraftExtensions.register(spark)
     ev(rows).createOrReplaceTempView("sc_events")
     val sql = spark.sql(
       """SELECT user_id, sequence_chain('600,100', ts,

@@ -22,7 +22,6 @@ class GeoSpec extends SparkSpec {
     assert(graft.functions.GeoOps.geohash(42.605, -5.603, 2)
       .toString == "ez")
     // through the SQL surface + codegen path
-    graft.GraftExtensions.register(spark)
     Seq((42.605, -5.603), (48.8566, 2.3522)).toDF("lat", "lon")
       .createOrReplaceTempView("geo_pts")
     val cells = spark.sql(

@@ -386,7 +386,6 @@ class StatsSpec extends SparkSpec {
   }
 
   test("bottom_k: exact min-k by key, merge-stable across partitions") {
-    graft.GraftExtensions.register(spark)
     val n = 5000
     val rows = (0 until n).map { i =>
       (i % 3, (i * 2654435761L) % 100003, i.toLong)

@@ -53,7 +53,6 @@ class HistStreamSpec extends SparkSpec {
     assert(a2 == a, "replay must not double-count")
 
     // quantiles read straight off the fold
-    graft.GraftExtensions.register(spark)
     view.createOrReplaceTempView("hist_states")
     val p50 = spark.sql(
       """SELECT g, hist_quantile(hist, 1, 2) AS p50 FROM hist_states""")
