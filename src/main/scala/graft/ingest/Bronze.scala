@@ -281,10 +281,18 @@ object Bronze {
       x.firstOf("message", "event.original", "zeek.conn.conn_state_description").as("message"),
       col(Raw).as("raw_data")), singleParse)
 
+  /** The bronze sources, in routing order. */
+  val Sources: Seq[String] = Seq("suricata", "wazuh", "zeek")
+
+  /** One source's projection of a raw stream. */
+  def projection(source: String, raw: DataFrame): DataFrame = source match {
+    case "suricata" => suricata(raw)
+    case "wazuh" => wazuh(raw)
+    case "zeek" => zeek(raw)
+  }
+
   /** Route one raw stream into the three typed bronze frames — the MV
     * fan-out (one source, three filtered projections). */
-  def route(raw: DataFrame): Map[String, DataFrame] = Map(
-    "suricata" -> suricata(raw),
-    "wazuh" -> wazuh(raw),
-    "zeek" -> zeek(raw))
+  def route(raw: DataFrame): Map[String, DataFrame] =
+    Sources.map(s => s -> projection(s, raw)).toMap
 }

@@ -1,9 +1,11 @@
 package graft.pipelines
 
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.core.PartitionedWriter
 import graft.ingest.Bronze
@@ -18,6 +20,15 @@ import graft.ingest.Bronze
   * unpartitioned and rewritten wholesale by SCD2 updates via an
   * atomic-enough temp-write-and-swap; facts/bridges/bronze are
   * `event_date=`-partitioned append-only tables.
+  *
+  * Every read of a warehouse table goes through [[read]], which infers
+  * the table's schema from disk once per context (a Spark job) and
+  * reads with it after that. This relies on the single-writer contract:
+  * only this context's pipelines write the tables it reads, and they
+  * never change a table's schema except through [[rewriteDim]], which
+  * records the schema it writes. A schema changed on disk by another
+  * writer is not seen here; [[Monitoring.schemaDrift]] infers from disk
+  * to catch exactly that.
   */
 class GoldContext(
     val spark: SparkSession,
@@ -28,18 +39,22 @@ class GoldContext(
 
   def exists(table: String): Boolean = PartitionedWriter.exists(spark, path(table))
 
+  /** table -> schema as inferred from disk by the first [[read]] */
+  private val schemas = new ConcurrentHashMap[String, StructType]()
+
+  /** An existing table, read with its schema resolved once per context:
+    * concurrent first reads wait on one inference. */
+  def read(table: String): DataFrame = {
+    val schema = schemas.computeIfAbsent(table, t => spark.read.parquet(path(t)).schema)
+    spark.read.schema(schema).parquet(path(table))
+  }
+
   /** Bronze table for a source; empty frame with the projection's schema
     * if nothing was ingested yet. */
   def bronze(source: String): DataFrame =
-    if (exists(s"bronze_$source")) spark.read.parquet(path(s"bronze_$source"))
-    else {
-      val emptyRaw = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(Bronze.Raw,
-            org.apache.spark.sql.types.StringType))))
-      Bronze.route(emptyRaw)(source)
-    }
+    if (exists(s"bronze_$source")) read(s"bronze_$source")
+    else Bronze.projection(source, spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], StructType(Seq(StructField(Bronze.Raw, StringType)))))
 
   /** Bronze rows in [start, end) — the universal incremental window scan
     * (B1). The event_date predicate is derived from the window bounds so
@@ -55,10 +70,9 @@ class GoldContext(
   }
 
   /** Gold table; empty frame with `schema` if absent. */
-  def gold(table: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (exists(table)) spark.read.parquet(path(table))
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  def gold(table: String, schema: StructType): DataFrame =
+    if (exists(table)) read(table)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Append new dim rows (C1 insert-if-absent output). */
   def appendDim(table: String, rows: DataFrame): Long = {
@@ -83,7 +97,9 @@ class GoldContext(
     * not hardcoded to 1: dims here are broadcast-sized today, but a dim
     * that grows keeps scan parallelism instead of bottlenecking on one
     * file. Compaction reads the temp parquet back — one cheap IO pass —
-    * rather than re-evaluating the (SCD2 chain) plan for a count. */
+    * rather than re-evaluating the (SCD2 chain) plan for a count, and
+    * reads it with the written frame's schema, so neither read-back nor
+    * the next [[read]] of the table infers it. */
   def rewriteDim(table: String, df: DataFrame): Long = {
     import org.apache.hadoop.fs.Path
     val target = new Path(path(table))
@@ -102,17 +118,17 @@ class GoldContext(
       val bytes = fs.getContentSummary(raw).getLength
       val targetFileBytes = 128L << 20
       val files = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      spark.read.parquet(raw.toString).repartition(files)
+      spark.read.schema(df.schema).parquet(raw.toString).repartition(files)
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     } else {
       // empty result: still write one schema-bearing parquet file so the
       // table stays readable
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], df.schema)
         .repartition(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     }
     fs.delete(raw, true)
-    val n = spark.read.parquet(tmp.toString).count()
+    val written = spark.read.schema(df.schema).parquet(tmp.toString)
+    val n = written.count()
 
     // FileSystem.rename reports many failures by returning false, not
     // throwing (quota, permissions, concurrent recreation of the
@@ -131,6 +147,7 @@ class GoldContext(
         throw e
     }
     if (hadTable) fs.delete(bak, true)
+    schemas.put(table, written.schema)
     n
   }
 
@@ -141,7 +158,7 @@ class GoldContext(
     PartitionedWriter.appendIfAbsent(rows, path(table), tsCol, keys)
 
   def count(table: String): Long =
-    if (exists(table)) spark.read.parquet(path(table)).count() else 0L
+    if (exists(table)) read(table).count() else 0L
 
   /** Fold a fact/bronze table's accumulated per-append files into
     * size-targeted sorted ones (the background-merge equivalent; see

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.ingest.Bronze
 import graft.operators.Replacing
 import graft.pipelines.GoldContext
 
@@ -33,13 +34,14 @@ object GoldViews {
 
   val scd2Tables: Seq[String] = Seq("dim_agent", "dim_host", "dim_rule")
 
-  /** Register all existing gold tables (+ bronze) as views. */
+  /** Register all existing gold tables (+ bronze) as views, read through
+    * `ctx`'s schema resolver: tables the context already read cost no
+    * schema inference. */
   def registerAll(ctx: GoldContext): Seq[String] = {
-    val spark = ctx.spark
     val gold = replacingKeys.keys.toSeq ++ scd2Tables
-    val bronze = Seq("bronze_suricata", "bronze_wazuh", "bronze_zeek")
+    val bronze = Bronze.Sources.map(s => s"bronze_$s")
     (gold ++ bronze).filter(ctx.exists).map { table =>
-      val raw = spark.read.parquet(ctx.path(table))
+      val raw = ctx.read(table)
       val canonical = replacingKeys.get(table) match {
         case Some((keys, version)) => Replacing.latestByKey(raw, keys, version)
         case None => raw // SCD2 dims: every version row is meaningful

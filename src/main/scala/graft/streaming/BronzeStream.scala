@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.util.concurrent.{Callable, Executors}
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -12,7 +16,10 @@ import graft.ingest.Bronze
   * (/root/reference/clickhouse/init/02_kafka_ingest.sql.tmpl):
   * one source stream of raw JSON strings, one `foreachBatch` that routes
   * each micro-batch through the same [[Bronze]] projections used in
-  * batch mode, appending to the three date-partitioned bronze tables.
+  * batch mode and appends them, concurrently, to the three
+  * date-partitioned bronze tables ([[fanOut]], also the batch-mode
+  * ingest of `tools.RunPipelines`). Like the reference's three MVs on
+  * one Kafka insert, the three writes share one cached batch.
   *
   * Delivery: source offsets live in the checkpoint, writes are
   * append-only, and all downstream gold builds dedupe on
@@ -71,18 +78,46 @@ object BronzeStream {
         col("window.start").as("window_start") :+
         col("n_events")): _*)
 
-  /** Start the route-and-append stream. Each micro-batch fans out to
-    * the three bronze tables (single pass per projection; writes are
-    * partitioned by event_date and sorted for scan locality). */
+  /** Start the route-and-append stream: each micro-batch goes through
+    * [[fanOut]]. */
   def start(raw: DataFrame, warehouseDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
     BatchSink.start(raw, checkpointDir, trigger) { (batch, _) =>
-      val cached = batch.cache()
-      try Bronze.route(cached).foreach { case (src, df) =>
-        if (!df.isEmpty)
-          PartitionedWriter.append(df, s"$warehouseDir/bronze_$src",
-            "event_ts", Seq("event_ts", "event_id"))
-      } finally cached.unpersist()
+      fanOut(batch, warehouseDir)
       ()
     }
+
+  /** The MV fan-out of one batch of raw JSON: the batch is cached once
+    * and its three [[Bronze.route]] projections are appended to
+    * `bronze_<source>` at the same time (partitioned by event_date and
+    * sorted for scan locality). Each source's sort-and-write stage is a
+    * single task, so one write at a time would leave cores idle. Every
+    * write runs to its end; then the first failure in source order is
+    * rethrown, which fails the batch. Returns the sources that had rows. */
+  def fanOut(raw: DataFrame, warehouseDir: String): Seq[String] = {
+    val cached = raw.cache()
+    val routed = Bronze.route(cached).toSeq
+    // a pool per batch, its threads started from this one: they inherit
+    // the caller's Spark local properties (a stream's job group)
+    val pool = Executors.newFixedThreadPool(routed.size)
+    try {
+      val writes = routed.map { case (src, df) =>
+        val write: Callable[Try[Option[String]]] = () => Try {
+          if (df.isEmpty) None
+          else {
+            PartitionedWriter.append(df, s"$warehouseDir/bronze_$src",
+              "event_ts", Seq("event_ts", "event_id"))
+            Some(src)
+          }
+        }
+        pool.submit(write)
+      }
+      val outcomes = writes.map(_.get())
+      outcomes.collectFirst { case Failure(e) => throw e }
+      outcomes.flatMap(_.get)
+    } finally {
+      pool.shutdown()
+      cached.unpersist()
+    }
+  }
 }

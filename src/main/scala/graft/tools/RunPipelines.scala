@@ -1,8 +1,8 @@
 package graft.tools
 
-import graft.core.{GraftSession, PartitionedWriter}
-import graft.ingest.Bronze
+import graft.core.GraftSession
 import graft.pipelines.{GoldContext, Registry, TimeWindow}
+import graft.streaming.BronzeStream
 
 /** Gold-build CLI — the Spark equivalent of the reference's
   * `airflow dags trigger -c '{"start_ts":…,"end_ts":…,"pipeline_id":…}'`
@@ -29,13 +29,7 @@ object RunPipelines {
       }
     } else if (args.length > 1 && args(1) == "ingest") {
       val raw = spark.read.text(args.drop(2).toIndexedSeq: _*).toDF("raw")
-      Bronze.route(raw).foreach { case (src, df) =>
-        if (df.count() > 0) {
-          PartitionedWriter.append(df, ctx.path(s"bronze_$src"), "event_ts",
-            Seq("event_ts", "event_id"))
-          println(s"ingested $src: ${df.count()} rows")
-        }
-      }
+      BronzeStream.fanOut(raw, ctx.root).foreach(src => println(s"ingested $src"))
     } else {
       val (window, rest) =
         if (args.length >= 3 && args(1).contains("-"))

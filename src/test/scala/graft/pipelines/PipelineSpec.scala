@@ -1,7 +1,8 @@
 package graft.pipelines
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
-import graft.core.PartitionedWriter
 import graft.ingest.Bronze
 import org.apache.spark.sql.functions._
 
@@ -21,6 +22,20 @@ class PipelineRunSpec extends SparkSpec {
         "tags":$tagsJson,"message":"m-$hash"}""".replaceAll("\n\\s*", "")
   }
 
+  private def suricataEvent(hash: String, ts: String): String =
+    s"""{"suricata":{"flow_id":7,"alert":{"severity":"2","signature":"ET SCAN"}},
+        "event":{"hash":"$hash","provider":"suricata","dataset":"alert"},
+        "@timestamp":"$ts","agent":{"name":"sensor-s"},
+        "rule":{"id":5,"name":"ET SCAN","category":["scan"]},
+        "network":{"transport":["tcp"]},"source":{"ip":"10.1.0.1","port":1234},
+        "destination":{"ip":"10.1.0.2","port":80},"tags":["s1"]}""".replaceAll("\n\\s*", "")
+
+  private def zeekEvent(hash: String, ts: String): String =
+    s"""{"zeek":{"uid":"u-$hash","ts":"$ts","conn":{"orig_bytes":"12"}},
+        "event":{"hash":"$hash","provider":"zeek","dataset":"conn","category":["network"]},
+        "@timestamp":"$ts","agent":{"name":"sensor-z"},"network":{"transport":["udp"]},
+        "source":{"ip":"10.2.0.1","port":"53"},"tags":["z1"]}""".replaceAll("\n\\s*", "")
+
   private def freshCtx(): GoldContext = {
     val dir = java.nio.file.Files.createTempDirectory("graft_gold").toString
     new GoldContext(spark, dir, "Asia/Jakarta")
@@ -28,12 +43,24 @@ class PipelineRunSpec extends SparkSpec {
 
   private def ingest(ctx: GoldContext, events: Seq[String]): Unit = {
     import spark.implicits._
-    Bronze.route(events.toDF("raw")).foreach { case (src, df) =>
-      if (df.count() > 0)
-        PartitionedWriter.append(df, ctx.path(s"bronze_$src"), "event_ts",
-          Seq("event_ts", "event_id"))
-    }
+    graft.streaming.BronzeStream.fanOut(events.toDF("raw"), ctx.root)
   }
+
+  /** A warehouse where every bronze and gold table exists, built by one
+    * `Registry.run` on `ctx`. */
+  private def runAllSources(): GoldContext = {
+    val ctx = freshCtx()
+    ingest(ctx, Seq(
+      wazuhEvent("ev1", "2026-01-08T01:00:00.000Z", "agentA", "10.0.0.1"),
+      wazuhEvent("ev2", "2026-01-08T02:00:00.000Z", "agentB", "10.0.0.2"),
+      suricataEvent("su1", "2026-01-08T03:00:00.000Z"),
+      zeekEvent("ze1", "2026-01-08T04:00:00.000Z")))
+    Registry.run(ctx, w1)
+    ctx
+  }
+
+  private val allTables: Seq[String] =
+    Bronze.Sources.map(s => s"bronze_$s") ++ Registry.all.map(_.target).distinct
 
   private val w1 = TimeWindow.of("2026-01-08 00:00:00", "2026-01-08 12:00:00")
   private val w2 = TimeWindow.of("2026-01-08 12:00:00", "2026-01-09 00:00:00")
@@ -174,6 +201,64 @@ class PipelineRunSpec extends SparkSpec {
     assert(fact.getAs[Int]("time_key") == 13000)
     val dimDate = spark.read.parquet(ctx.path("dim_date")).collect().head
     assert(dimDate.getAs[Int]("date_key") == 20260109)
+  }
+
+  test("ctx.read serves every bronze and gold table as spark.read.parquet does") {
+    val ctx = runAllSources()
+    assert(allTables.filterNot(ctx.exists).isEmpty, allTables.filterNot(ctx.exists))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for (t <- allTables) {
+      val disk = spark.read.parquet(ctx.path(t))
+      assert(ctx.read(t).schema == disk.schema, t)
+      assert(rows(ctx.read(t)) == rows(disk), t)
+    }
+  }
+
+  test("GoldViews.registerAll after Registry.run infers no table schema") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val ctx = runAllSources()
+    val Phase = "graft.spec.phase"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(Phase)))
+          .foreach(ph => jobs.add(ph -> e.stageInfos.map(_.name)))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(Phase, "register")
+      assert(graft.queries.GoldViews.registerAll(ctx).size == 19)
+      // a marker job after it: listener events arrive in order
+      sc.setLocalProperty(Phase, "done")
+      spark.range(1).count()
+      org.scalatest.concurrent.Eventually.eventually(
+        org.scalatest.concurrent.Eventually.timeout(
+          org.scalatest.time.Span(30, org.scalatest.time.Seconds))) {
+        assert(jobs.asScala.exists(_._1 == "done"))
+      }
+    } finally {
+      sc.setLocalProperty(Phase, null)
+      sc.removeSparkListener(listener)
+    }
+    val schemaJobs = jobs.asScala.filter { case (ph, stages) =>
+      ph == "register" && stages.exists(_.startsWith("parquet at"))
+    }
+    assert(schemaJobs.isEmpty, schemaJobs)
+  }
+
+  test("the schema-drift check sees a column added on disk after ctx cached the schema") {
+    import spark.implicits._
+    val ctx = freshCtx()
+    ctx.appendDim("dim_x", Seq((1L, "a")).toDF("k", "v"))
+    val cached = ctx.read("dim_x").schema
+    // another writer replaces the table with a wider schema
+    Seq((2L, "b", 7)).toDF("k", "v", "extra")
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(ctx.path("dim_x"))
+    // the context keeps serving the schema it resolved ...
+    assert(ctx.read("dim_x").schema == cached)
+    // ... and the drift check reads the one on disk
+    assert(Monitoring.schemaDrift(ctx, "dim_x", cached) == ((Nil, Seq("extra"), Nil)))
   }
 
   test("suricata + zeek fixtures flow through their facts and bridges") {

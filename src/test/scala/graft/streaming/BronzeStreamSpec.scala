@@ -1,10 +1,104 @@
 package graft.streaming
 
-import graft.SparkSpec
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
-class BronzeStreamSpec extends SparkSpec {
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.{Seconds, Span}
+
+import graft.SparkSpec
+import graft.ingest.Bronze
+
+class BronzeStreamSpec extends SparkSpec with Eventually {
+
+  private def wazuhLine(h: String, ts: String) =
+    s"""{"event":{"hash":"$h","provider":"wazuh"},"@timestamp":"$ts","agent":{"name":"a1","ip":"10.0.0.1"},"rule":{"id":"1","level":2,"name":"r"},"tags":[],"message":"m"}"""
+  private def suricataLine(h: String, ts: String) =
+    s"""{"suricata":{"flow_id":1},"event":{"hash":"$h","provider":"suricata"},"@timestamp":"$ts","agent":{"name":"s1"},"rule":{"id":5,"name":"sig"}}"""
+  private def zeekLine(h: String, ts: String) =
+    s"""{"zeek":{"uid":"u$h","ts":"$ts","conn":{"orig_bytes":"12","duration":"0.5"}},"event":{"hash":"$h","provider":"zeek","category":["network"]},"@timestamp":"$ts","source":{"ip":"10.0.0.2","port":"5353"}}"""
+
+  /** A drop directory holding one JSON-lines file with events of all
+    * three sources, a broken line and a hash-less one, over two days. */
+  private def dropOfAllSources(): (String, String) = {
+    val base = Files.createTempDirectory("graft_fanout").toString
+    val in = s"$base/in"
+    new java.io.File(in).mkdirs()
+    val lines = (1 to 6).flatMap { i =>
+      val ts = s"2026-01-0${7 + i % 2}T0$i:00:00.000Z"
+      Seq(wazuhLine(s"w$i", ts), suricataLine(s"s$i", ts), zeekLine(s"z$i", ts))
+    } ++ Seq("{broken json", wazuhLine("", "2026-01-08T01:00:02.000Z"))
+    Files.writeString(Paths.get(s"$in/batch.jsonl"), lines.mkString("\n"))
+    (base, in)
+  }
+
+  private def runOnce(base: String, in: String): StreamingQuery = {
+    val q = BronzeStream.start(BronzeStream.fileSource(spark, in), s"$base/wh",
+      s"$base/ckpt", Trigger.AvailableNow())
+    q.awaitTermination(120000)
+    q
+  }
+
+  test("each bronze table holds exactly its source's projection of the batch") {
+    val (base, in) = dropOfAllSources()
+    runOnce(base, in)
+    val raw = spark.read.text(in).toDF(Bronze.Raw)
+    for (src <- Bronze.Sources) {
+      val expected = Bronze.projection(src, raw)
+      val landed = spark.read.parquet(s"$base/wh/bronze_$src")
+        .select(expected.columns.map(col).toIndexedSeq: _*)
+      assert(landed.schema.map(f => f.name -> f.dataType) ==
+        expected.schema.map(f => f.name -> f.dataType), src)
+      assert(landed.count() == 6, src)
+      assert(landed.exceptAll(expected).isEmpty && expected.exceptAll(landed).isEmpty, src)
+    }
+  }
+
+  test("a failing bronze write lets the other sources land and fails the batch") {
+    val (base, in) = dropOfAllSources()
+    // a plain file where the first source's table directory belongs
+    new java.io.File(s"$base/wh").mkdirs()
+    Files.writeString(Paths.get(s"$base/wh/bronze_suricata"), "not a table")
+    val e = intercept[StreamingQueryException](runOnce(base, in))
+    assert(e.getMessage.contains("bronze_suricata"), e.getMessage)
+    for (src <- Seq("wazuh", "zeek"))
+      assert(spark.read.parquet(s"$base/wh/bronze_$src").count() == 6, src)
+  }
+
+  test("every Spark job of a bronze batch carries the stream's job group") {
+    val (base, in) = dropOfAllSources()
+    val groups = new ConcurrentLinkedQueue[String]() // in delivery order
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    val sc = spark.sparkContext
+    // one marker job before and one after the stream: listener events
+    // arrive in order, so the jobs in between are the stream's
+    def marker(group: String): Unit = {
+      sc.setJobGroup(group, "BronzeStreamSpec")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      eventually(timeout(Span(30, Seconds)))(assert(groups.contains(group)))
+    }
+    sc.addSparkListener(listener)
+    val q = try {
+      marker("bronze-spec-before")
+      val q = runOnce(base, in)
+      marker("bronze-spec-after")
+      q
+    } finally sc.removeSparkListener(listener)
+    val seen = groups.asScala.toSeq
+    // a marker's count may run more than one job
+    val batch = seen.slice(seen.lastIndexOf("bronze-spec-before") + 1, seen.indexOf("bronze-spec-after"))
+    // per source at least the emptiness probe and the write
+    assert(batch.size >= 2 * Bronze.Sources.size, batch)
+    assert(batch.toSet == Set(q.runId.toString), batch)
+  }
 
   test("file-source stream routes micro-batches into bronze tables") {
     val base = java.nio.file.Files.createTempDirectory("graft_stream").toString
