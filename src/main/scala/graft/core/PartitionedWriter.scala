@@ -1,10 +1,15 @@
 package graft.core
 
+import java.io.IOException
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Date-partitioned parquet table layout + the two write disciplines the
-  * reference's storage engine provides implicitly.
+  * reference's storage engine provides implicitly, + the one crash-safe
+  * swap every table rewrite goes through.
   *
   * Layout mirrors MergeTree `PARTITION BY toDate(event_ts) ORDER BY
   * (event_ts, event_id)` (/root/reference/clickhouse/init/01_bronze_tables.sql:25-27):
@@ -21,6 +26,12 @@ import org.apache.spark.sql.functions._
   *    (fact_wazuh_events.sql:76-79). Reading only the window's
   *    partitions keeps the anti-join bounded regardless of table size.
   *
+  * Rewrites — compaction, purge, `Summing.merge`/`ttlRollup` and
+  * `GoldContext.rewriteDim` — replace data by [[swap]] and recover a
+  * crashed swap by [[heal]]. Partition rewrites stage beside the table
+  * root in one dir per lifecycle ([[stagingDir]]), and every write or
+  * lifecycle entry heals all of them first ([[healTable]]).
+  *
   * Per-micro-batch `__batch_id` replay writes are a different layout,
   * owned by [[BatchSink]].
   */
@@ -31,16 +42,22 @@ object PartitionedWriter {
   def withDate(df: DataFrame, tsCol: String): DataFrame =
     df.withColumn(DateCol, to_date(col(tsCol)))
 
+  /** The table at `path` by its normalized root, and its file system. */
+  private[graft] def fsRoot(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val root = new Path(path)
+    (root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+  }
+
   /** Heal-first-everywhere: EVERY write entry point heals crash
     * staging before touching the table. An append into a partition
     * whose live dir is missing after a mid-swap crash would otherwise
     * recreate the live dir, making the next heal treat the bak as
     * stale and delete it — permanently dropping the pre-crash copy
-    * (the resurrection-window class the swap protocol closes). */
-  private def healFirst(spark: SparkSession, path: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) healAllStaging(fs, root)
+    * (the resurrection-window class the swap protocol closes). Returns
+    * whether a table is at `path`. */
+  private def healFirst(spark: SparkSession, path: String): Boolean = {
+    val (fs, root) = fsRoot(spark, path)
+    healTable(fs, root)
   }
 
   def append(df: DataFrame, path: String, tsCol: String,
@@ -64,15 +81,19 @@ object PartitionedWriter {
   def appendIfAbsent(df: DataFrame, path: String, tsCol: String,
       keys: Seq[String]): Long = {
     val spark = df.sparkSession
-    healFirst(spark, path)
+    val existed = healFirst(spark, path)
     val dated = withDate(df, tsCol).dropDuplicates(keys)
     val fresh =
-      if (exists(spark, path)) {
+      if (existed) {
         // restrict the existing-side scan to the touched dates (partition
-        // pruning via an IN filter over the partition column)
+        // pruning via an IN filter over the partition column); the key
+        // columns are read with the incoming rows' types, so the target's
+        // schema is never inferred (a Spark job per append)
         val dates = dated.select(DateCol).distinct()
-        val existing = spark.read.parquet(path)
-          .join(org.apache.spark.sql.functions.broadcast(dates), Seq(DateCol), "left_semi")
+        val keySchema = StructType(dated.schema
+          .filter(f => f.name == DateCol || keys.contains(f.name)))
+        val existing = spark.read.schema(keySchema).parquet(path)
+          .join(broadcast(dates), Seq(DateCol), "left_semi")
           .select(keys.map(col).toIndexedSeq: _*)
         dated.join(existing, keys, "left_anti")
       } else dated
@@ -85,9 +106,102 @@ object PartitionedWriter {
   }
 
   def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
+    val (fs, root) = fsRoot(spark, path)
+    fs.exists(root)
+  }
+
+  // ---- the crash-safe swap ----
+
+  /** FileSystem.rename reports many failures by returning false, not
+    * throwing (quota, permissions, concurrent recreation of the
+    * destination) — an unchecked false followed by the bak delete would
+    * destroy the only remaining copy of the data. */
+  private def mustRename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new IOException(s"rename $from -> $to failed")
+
+  /** Replace `live` with `staged` by two metadata-speed renames: drop a
+    * stale `bak`, rename live → bak (when live exists), staged → live,
+    * then drop bak. Readers see `live` missing only between the two
+    * renames. If staged → live fails, live is put back before the
+    * failure surfaces; a crash between the renames leaves bak, which
+    * [[heal]] restores. */
+  private[graft] def swap(fs: FileSystem, staged: Path, live: Path, bak: Path): Unit = {
+    fs.delete(bak, true)
+    val hadLive = fs.exists(live)
+    if (hadLive) mustRename(fs, live, bak)
+    try mustRename(fs, staged, live)
+    catch {
+      case e: IOException =>
+        if (hadLive && !fs.exists(live)) fs.rename(bak, live)
+        throw e
+    }
+    if (hadLive) fs.delete(bak, true)
+  }
+
+  /** Recover a crashed [[swap]]: live gone, bak present → restore the
+    * bak. Live PRESENT → the swap completed (only the bak delete was
+    * lost), so the bak is stale and must be removed here: leaving it
+    * open a resurrection window where a later legitimate drop of the
+    * partition (TTL expiry, full purge) is undone by the next heal
+    * restoring pre-purge rows. */
+  private[graft] def heal(fs: FileSystem, live: Path, bak: Path): Unit =
+    if (fs.exists(bak)) {
+      if (fs.exists(live)) fs.delete(bak, true)
+      else mustRename(fs, bak, live)
+    }
+
+  // ---- partition staging ----
+
+  private val CompactStaging = "__compact"
+  private val PurgeStaging = "__purge"
+  private[graft] val MergeStaging = "__merge"
+
+  /** The staging-dir suffixes every lifecycle operation may leave a
+    * crash behind in. Healing must cover ALL of them on EVERY
+    * lifecycle entry — a compact-crash bak healed only by the next
+    * compact would survive an intervening purge/TTL drop of the same
+    * partition and resurrect the removed rows when compact finally
+    * runs. Heal-first-everywhere (single writer assumed, as
+    * documented) means no stale bak exists at the moment any
+    * legitimate partition drop happens. */
+  private val StagingSuffixes = Seq(CompactStaging, PurgeStaging, MergeStaging)
+
+  /** A lifecycle's staging dir: BESIDE the table root (a dir inside it
+    * would corrupt Hive-style partition discovery), derived from the
+    * NORMALIZED root — the raw path string would diverge on a trailing
+    * slash, landing staging inside the root where no heal looks. */
+  private def stagingDir(root: Path, suffix: String): Path =
+    new Path(root.toString + suffix)
+
+  /** Heal every lifecycle's staging dir beside `root`: each `<p>.bak`
+    * is healed against partition `<p>`, and a staging dir left empty is
+    * dropped. Returns false when no table is at `root`. */
+  private[graft] def healTable(fs: FileSystem, root: Path): Boolean =
+    fs.exists(root) && {
+      StagingSuffixes.map(stagingDir(root, _)).filter(fs.exists).foreach { staging =>
+        fs.listStatus(staging).map(_.getPath).filter(_.getName.endsWith(".bak"))
+          .foreach(b => heal(fs, new Path(root, b.getName.stripSuffix(".bak")), b))
+        dropIfEmpty(fs, staging)
+      }
+      true
+    }
+
+  private def dropIfEmpty(fs: FileSystem, dir: Path): Unit =
+    if (fs.exists(dir) && fs.listStatus(dir).isEmpty) fs.delete(dir, true)
+
+  /** The staged partition rewrite: ONE job writes `rows` partitioned by
+    * date into `<staging>/out`, each of `partitions` is swapped into the
+    * live table, and the staging output is dropped. */
+  private[graft] def rewritePartitions(fs: FileSystem, root: Path,
+      suffix: String, rows: DataFrame, partitions: Seq[String]): Unit = {
+    val staging = stagingDir(root, suffix)
+    val out = new Path(staging, "out")
+    fs.delete(out, true)
+    rows.write.mode(SaveMode.Overwrite).partitionBy(DateCol).parquet(out.toString)
+    partitions.foreach(p =>
+      swap(fs, new Path(out, p), new Path(root, p), new Path(staging, p + ".bak")))
+    fs.delete(out, true)
+    dropIfEmpty(fs, staging)
   }
 
   case class CompactStats(partition: String, filesBefore: Int, filesAfter: Int)
@@ -106,28 +220,16 @@ object PartitionedWriter {
     * min/max pruning works across the whole partition again — appends
     * keep locality only within each append's own files.
     *
-    * Swap discipline per partition, same as GoldContext.rewriteDim:
-    * write to a staging dir OUTSIDE the table root (a tmp dir inside it
-    * would corrupt Hive-style partition discovery), rename live → bak,
-    * staged → live, delete bak; a crash between the renames is healed
-    * on the next call (bak restored when live is missing). Readers see
-    * the partition missing only between two metadata-speed renames.
-    * Content is byte-for-byte the same rows, so appendIfAbsent's
-    * key-level idempotency is unaffected. */
+    * One write per touched partition (each gets its own size-derived
+    * file count), staged as `<p>.tmp` in the compact staging dir and
+    * replaced by [[swap]]. Content is byte-for-byte the same rows, so
+    * appendIfAbsent's key-level idempotency is unaffected. */
   def compactPartitions(spark: SparkSession, path: String,
       orderCols: Seq[String] = Nil, minFiles: Int = 8,
       targetFileBytes: Long = 128L << 20): Seq[CompactStats] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    // staging is derived from the NORMALIZED root, exactly as
-    // healAllStaging derives it — building it from the raw `path`
-    // string would diverge on a trailing slash (the staging dir would
-    // even land INSIDE the table root) and crash baks would never heal
-    val staging = new Path(root.toString + "__compact")
-
-    healAllStaging(fs, root)
+    val (fs, root) = fsRoot(spark, path)
+    if (!healTable(fs, root)) return Nil
+    val staging = stagingDir(root, CompactStaging)
     // list AFTER the heal: a partition the heal just restored must be
     // visible to this very compaction pass, not deferred a full cycle
     val parts = fs.listStatus(root).toSeq
@@ -146,78 +248,17 @@ object PartitionedWriter {
             part.repartitionByRange(files, orderCols.map(col).toIndexedSeq: _*)
               .sortWithinPartitions(orderCols.map(col).toIndexedSeq: _*)
           else part.repartition(files)
-        swapPartition(fs, staging, p.getPath) { tmp =>
-          shaped.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        }
+        val name = p.getPath.getName
+        val tmp = new Path(staging, name + ".tmp")
+        shaped.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+        swap(fs, tmp, p.getPath, new Path(staging, name + ".bak"))
         val after = fs.listStatus(p.getPath)
           .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        Some(CompactStats(p.getPath.getName, dataFiles.length, after))
+        Some(CompactStats(name, dataFiles.length, after))
       }
     }
-    if (fs.exists(staging) && fs.listStatus(staging).isEmpty)
-      fs.delete(staging, true)
+    dropIfEmpty(fs, staging)
     stats
-  }
-
-  /** The staging-dir suffixes every lifecycle operation may leave a
-    * crash behind in. Healing must cover ALL of them on EVERY
-    * lifecycle entry — a compact-crash bak healed only by the next
-    * compact would survive an intervening purge/TTL drop of the same
-    * partition and resurrect the removed rows when compact finally
-    * runs. Heal-first-everywhere (single writer assumed, as
-    * documented) means no stale bak exists at the moment any
-    * legitimate partition drop happens. */
-  private val StagingSuffixes = Seq("__compact", "__purge")
-
-  private[graft] def healAllStaging(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit =
-    StagingSuffixes.foreach(sfx => healStaging(fs, root,
-      new org.apache.hadoop.fs.Path(root.toString + sfx)))
-
-  /** Heal a crash from a previous swap: live partition gone, bak
-    * present → restore the bak. Live partition PRESENT → the swap
-    * completed (only the bak delete was lost), so the bak is stale and
-    * must be removed here: leaving it open a resurrection window where
-    * a later legitimate drop of the partition (TTL expiry, full purge)
-    * is undone by the next heal restoring pre-purge rows. */
-  private[graft] def healStaging(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      staging: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(staging)) fs.listStatus(staging).toSeq
-      .filter(_.getPath.getName.endsWith(".bak"))
-      .foreach { b =>
-        val live = new org.apache.hadoop.fs.Path(root,
-          b.getPath.getName.stripSuffix(".bak"))
-        if (!fs.exists(live)) fs.rename(b.getPath, live)
-        else fs.delete(b.getPath, true)
-      }
-
-  /** Atomic-ish partition replacement: stage the rewrite OUTSIDE the
-    * table root, rename live → bak, staged → live, drop bak. A crash
-    * between the renames is healed by [[healStaging]] on the next
-    * call; readers see the partition missing only between two
-    * metadata-speed renames. */
-  private def swapPartition(fs: org.apache.hadoop.fs.FileSystem,
-      staging: org.apache.hadoop.fs.Path,
-      live: org.apache.hadoop.fs.Path)(
-      write: org.apache.hadoop.fs.Path => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    def mustRename(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"rename $from -> $to failed")
-    val tmp = new Path(staging, live.getName + ".tmp")
-    val bak = new Path(staging, live.getName + ".bak")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    write(tmp)
-    mustRename(live, bak)
-    try mustRename(tmp, live)
-    catch {
-      case e: java.io.IOException =>
-        if (!fs.exists(live)) fs.rename(bak, live)
-        throw e
-    }
-    fs.delete(bak, true)
   }
 
   case class PurgeStats(partition: String, rowsBefore: Long, rowsRemoved: Long)
@@ -240,12 +281,10 @@ object PartitionedWriter {
     *     (partition-pruned IN filter) counting rows and matches per
     *     partition.
     *  3. rewrite — ONE anti-join job writes every surviving row of
-    *     the affected partitions into a staged partitioned layout;
-    *     live partitions are then replaced by metadata-speed renames
-    *     (live → bak, staged → live, drop bak — crash-healed by
-    *     [[healStaging]]). Untouched partitions are never opened, let
-    *     alone rewritten — the specs pin that their files are
-    *     byte-identical afterwards.
+    *     the affected partitions through [[rewritePartitions]]; live
+    *     partitions are then replaced by metadata-speed renames.
+    *     Untouched partitions are never opened, let alone rewritten —
+    *     the specs pin that their files are byte-identical afterwards.
     *
     * A partition whose every row is purged is dropped entirely. The
     * returned receipts (partition, rowsBefore, rowsRemoved) are the
@@ -253,13 +292,8 @@ object PartitionedWriter {
     * purge removes 0 rows (idempotent). */
   def purgeKeys(spark: SparkSession, path: String, keyCol: String,
       keys: DataFrame): Seq[PurgeStats] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    // normalized-root staging, same derivation as healAllStaging
-    val staging = new Path(root.toString + "__purge")
-    healAllStaging(fs, root)
+    val (fs, root) = fsRoot(spark, path)
+    if (!healTable(fs, root)) return Nil
 
     val del = keys.select(col(keyCol)).distinct()
     val affected = locateAffected(spark, path, keyCol, del)
@@ -280,53 +314,14 @@ object PartitionedWriter {
         r.getLong(1), r.getLong(2)))
       .sortBy(_.partition)
 
-    // one job stages every survivor partition's rewrite; the staged
-    // output is partitioned identically to the live table
     val survivors = stats.filter(s => s.rowsRemoved < s.rowsBefore)
-    if (survivors.nonEmpty) {
-      val stagedOut = new Path(staging, "out")
-      if (fs.exists(stagedOut)) fs.delete(stagedOut, true)
-      marked.filter(col("__del").isNull).drop("__del")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy(DateCol).parquet(stagedOut.toString)
-      swapStagedPartitions(fs, root, staging, stagedOut,
+    if (survivors.nonEmpty)
+      rewritePartitions(fs, root, PurgeStaging,
+        marked.filter(col("__del").isNull).drop("__del"),
         survivors.map(_.partition).toSeq)
-    }
     stats.filter(s => s.rowsRemoved == s.rowsBefore)
       .foreach(s => fs.delete(new Path(root, s.partition), true))
-    if (fs.exists(staging) && fs.listStatus(staging).isEmpty)
-      fs.delete(staging, true)
     stats.toSeq
-  }
-
-  /** Swap a set of pre-staged partition directories into the live
-    * table by metadata-speed renames (live → bak, staged → live, drop
-    * bak), then drop the staging output. Crash between renames is
-    * healed by [[healStaging]] on the next lifecycle call. */
-  private[graft] def swapStagedPartitions(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      staging: org.apache.hadoop.fs.Path,
-      stagedOut: org.apache.hadoop.fs.Path,
-      partitions: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    def mustRename(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"rename $from -> $to failed")
-    partitions.foreach { p =>
-      val live = new Path(root, p)
-      val bak = new Path(staging, p + ".bak")
-      if (fs.exists(bak)) fs.delete(bak, true)
-      mustRename(live, bak)
-      try mustRename(new Path(stagedOut, p), live)
-      catch {
-        case e: java.io.IOException =>
-          if (!fs.exists(live)) fs.rename(bak, live)
-          throw e
-      }
-      fs.delete(bak, true)
-    }
-    fs.delete(stagedOut, true)
   }
 
   case class ExpireStats(partition: String, files: Int, bytes: Long)
@@ -341,13 +336,10 @@ object PartitionedWriter {
     * retention audit trail. */
   def expirePartitions(spark: SparkSession, path: String,
       cutoff: java.time.LocalDate): Seq[ExpireStats] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
+    val (fs, root) = fsRoot(spark, path)
     // heal BEFORE deleting anything: a stale bak from a crashed swap
     // must not outlive this expiry and resurrect the dropped rows
-    healAllStaging(fs, root)
+    if (!healTable(fs, root)) return Nil
     fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$DateCol="))
       .filter { s =>
@@ -374,7 +366,4 @@ object PartitionedWriter {
       .select(col(keyCol), col(DateCol))
       .join(broadcast(del), Seq(keyCol), "left_semi")
       .select(col(DateCol).cast("string")).distinct()
-
-  def readTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 }

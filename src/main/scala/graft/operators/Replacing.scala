@@ -33,7 +33,4 @@ object Replacing {
     }
     packed.select(cols.toIndexedSeq: _*)
   }
-
-  /** Exact duplicate removal (whole-row), the degenerate case. */
-  def dropExactDuplicates(df: DataFrame): DataFrame = df.dropDuplicates()
 }

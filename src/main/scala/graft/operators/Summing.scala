@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,69 +59,20 @@ object Summing {
     * after (the fold only re-associates long additions); the stored
     * row count shrinks to one per (key, date partition).
     *
-    * Two fixed-size jobs — cost scales with the data, never with the
-    * partition count: one aggregation produces both the receipts and
-    * the foldable set, one staged partitioned write rewrites every
-    * foldable partition, and the swap is metadata-speed renames
-    * (crash-healed like compaction/purge). Already-folded partitions
-    * are never rewritten.
-    *
     * `sinceDate` scopes the scan: a cadenced merge only re-reads the
     * partitions appends could have touched since the last run —
     * without it, a daily merge of a year-long counter table would
-    * re-scan the cold 99% every day. */
+    * re-scan the cold 99% every day. The fold, its receipts and the
+    * staged swap are [[fold]]'s. */
   def merge(spark: SparkSession, path: String, keyCols: Seq[String],
       measureCols: Seq[String], tsCol: String,
       sinceDate: Option[java.time.LocalDate] = None): Seq[MergeStats] = {
-    import org.apache.hadoop.fs.Path
-    val DateCol = PartitionedWriter.DateCol
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    val staging = new Path(path + "__merge")
-    PartitionedWriter.healStaging(fs, root, staging)
-
-    val tbl0 = spark.read.parquet(path)
-    val tbl = sinceDate.fold(tbl0)(since => tbl0.filter(
-      col(DateCol) >= lit(java.sql.Date.valueOf(since))))
-    // ONE scan + ONE aggregation produce BOTH the receipts and the
-    // folded rows: the per-(date, key) fold carries its partial-row
-    // count, the per-date stats re-aggregate that already-tiny frame,
-    // and the staged write reuses it filtered to the foldable dates.
-    // (The previous shape scanned the store twice — once for a
-    // count-only receipt aggregation, once for the fold proper.)
-    val foldAggs = Seq(count(lit(1)).as("__n"), max(col(tsCol)).as(tsCol)) ++
-      measureCols.map(m => sum(col(m)).as(m))
-    val folded0 = tbl.groupBy((DateCol +: keyCols).map(col): _*)
-      .agg(foldAggs.head, foldAggs.tail: _*)
-      .persist()
-    try {
-      val stats = folded0.groupBy(col(DateCol).cast("string").as("__d"))
-        .agg(sum(col("__n")).as("__before"), count(lit(1)).as("__after"))
-        .collect()
-        .map(r => MergeStats(s"$DateCol=${r.getString(0)}",
-          r.getLong(1), r.getLong(2)))
-        .sortBy(_.partition)
-
-      val foldable = stats.filter(s => s.rowsAfter < s.rowsBefore)
-      if (foldable.nonEmpty) {
-        val dates = foldable.map(s =>
-          java.sql.Date.valueOf(s.partition.stripPrefix(s"$DateCol=")))
-        val folded = folded0.filter(col(DateCol).isin(dates: _*))
-          .select(tbl.columns.map(col).toIndexedSeq: _*) // original order
-        val stagedOut = new Path(staging, "out")
-        if (fs.exists(stagedOut)) fs.delete(stagedOut, true)
-        // one file per folded partition — the merge's entire point is
-        // shrinking the stored row/file count
-        folded.repartition(col(DateCol))
-          .write.partitionBy(DateCol).parquet(stagedOut.toString)
-        PartitionedWriter.swapStagedPartitions(fs, root, staging, stagedOut,
-          foldable.map(_.partition).toSeq)
-      }
-      if (fs.exists(staging) && fs.listStatus(staging).isEmpty)
-        fs.delete(staging, true)
-      stats.toSeq
-    } finally { folded0.unpersist(); () }
+    val (fs, root) = PartitionedWriter.fsRoot(spark, path)
+    if (!PartitionedWriter.healTable(fs, root)) return Nil
+    val tbl = spark.read.parquet(path)
+    val scan = sinceDate.fold(tbl)(since => tbl.filter(
+      col(PartitionedWriter.DateCol) >= lit(java.sql.Date.valueOf(since))))
+    fold(fs, root, scan, keyCols, measureCols, tsCol, carried = Nil)
   }
 
   /** The family's `TTL … GROUP BY … SET v = sum(v)` storage
@@ -134,21 +86,15 @@ object Summing {
     * row count in expired partitions collapses to one per
     * (date, rollup key).
     *
-    * Same staged-swap discipline as [[merge]] (crash-healed renames),
-    * and the scan is bounded by the EXPIRED date set, never the
-    * table: the cadenced lifecycle job reads each cold partition
-    * exactly once, on the day it expires. */
+    * Same [[fold]] as [[merge]], and the scan is bounded by the
+    * EXPIRED date set, never the table: the cadenced lifecycle job
+    * reads each cold partition exactly once, on the day it expires. */
   def ttlRollup(spark: SparkSession, path: String,
       cutoff: java.time.LocalDate, rollupKeys: Seq[String],
       measureCols: Seq[String], tsCol: String): Seq[MergeStats] = {
-    import org.apache.hadoop.fs.Path
     val DateCol = PartitionedWriter.DateCol
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    val staging = new Path(path + "__merge")
-    PartitionedWriter.healStaging(fs, root, staging)
-
+    val (fs, root) = PartitionedWriter.fsRoot(spark, path)
+    if (!PartitionedWriter.healTable(fs, root)) return Nil
     val expired = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$DateCol="))
       .map(_.getPath.getName.stripPrefix(s"$DateCol="))
@@ -156,45 +102,52 @@ object Summing {
       .sorted
     if (expired.isEmpty) return Nil
 
-    val tbl = spark.read.parquet(path)
+    val scan = spark.read.parquet(path)
       .filter(col(DateCol).isin(expired.map(java.sql.Date.valueOf): _*))
-    val groupCols = DateCol +: rollupKeys
-    val carried = tbl.columns
-      .filterNot(groupCols.contains).filterNot(measureCols.contains)
+    val carried = scan.columns.toSeq
+      .filterNot((DateCol +: rollupKeys).contains).filterNot(measureCols.contains)
       .filterNot(_ == tsCol)
-    // ONE scan + ONE aggregation yield receipts AND folded rows (the
-    // merge discipline, single-pass — see merge above): already-
-    // collapsed partitions are NOT rewritten
-    val aggs =
-      Seq(count(lit(1)).as("__n"), max(col(tsCol)).as(tsCol)) ++
+    fold(fs, root, scan, rollupKeys, measureCols, tsCol, carried)
+  }
+
+  /** What [[merge]] and [[ttlRollup]] share: two fixed-size jobs —
+    * cost scales with the data, never with the partition count. ONE
+    * aggregation of `scan` to one row per (date, `keys`) — partial-row
+    * count, max `tsCol`, summed measures, min of `carried` — yields both
+    * the receipts and the folded rows: the per-date receipts
+    * re-aggregate that already-tiny persisted frame, and ONE staged
+    * partitioned write reuses it for the dates the fold shrinks, which
+    * are then swapped in (crash-healed like compaction/purge).
+    * Already-folded partitions are never rewritten. */
+  private def fold(fs: FileSystem, root: Path, scan: DataFrame,
+      keys: Seq[String], measureCols: Seq[String], tsCol: String,
+      carried: Seq[String]): Seq[MergeStats] = {
+    val DateCol = PartitionedWriter.DateCol
+    val aggs = Seq(count(lit(1)).as("__n"), max(col(tsCol)).as(tsCol)) ++
       measureCols.map(m => sum(col(m)).as(m)) ++
       carried.map(c => min(col(c)).as(c))
-    val folded0 = tbl.groupBy(groupCols.map(col): _*)
+    val folded = scan.groupBy((DateCol +: keys).map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
       .persist()
     try {
-      val stats = folded0.groupBy(col(DateCol).cast("string").as("__d"))
+      val stats = folded.groupBy(col(DateCol).cast("string").as("__d"))
         .agg(sum(col("__n")).as("__before"), count(lit(1)).as("__after"))
         .collect()
         .map(r => MergeStats(s"$DateCol=${r.getString(0)}",
           r.getLong(1), r.getLong(2)))
-        .sortBy(_.partition)
-      val foldable = stats.filter(s => s.rowsAfter < s.rowsBefore)
+        .sortBy(_.partition).toSeq
+      val foldable = stats.filter(s => s.rowsAfter < s.rowsBefore).map(_.partition)
       if (foldable.nonEmpty) {
-        val dates = foldable.map(s =>
-          java.sql.Date.valueOf(s.partition.stripPrefix(s"$DateCol=")))
-        val folded = folded0.filter(col(DateCol).isin(dates: _*))
-          .select(tbl.columns.map(col).toIndexedSeq: _*) // original order
-        val stagedOut = new Path(staging, "out")
-        if (fs.exists(stagedOut)) fs.delete(stagedOut, true)
-        folded.repartition(col(DateCol))
-          .write.partitionBy(DateCol).parquet(stagedOut.toString)
-        PartitionedWriter.swapStagedPartitions(fs, root, staging, stagedOut,
-          foldable.map(_.partition).toSeq)
+        val dates = foldable.map(p => java.sql.Date.valueOf(p.stripPrefix(s"$DateCol=")))
+        // one file per folded partition — the merge's entire point is
+        // shrinking the stored row/file count
+        PartitionedWriter.rewritePartitions(fs, root, PartitionedWriter.MergeStaging,
+          folded.filter(col(DateCol).isin(dates: _*))
+            .select(scan.columns.map(col).toIndexedSeq: _*) // original order
+            .repartition(col(DateCol)),
+          foldable)
       }
-      if (fs.exists(staging) && fs.listStatus(staging).isEmpty)
-        fs.delete(staging, true)
-      stats.toSeq
-    } finally { folded0.unpersist(); () }
+      stats
+    } finally { folded.unpersist(); () }
   }
 }

@@ -86,12 +86,13 @@ class GoldContext(
     * (dim_agent_scd2.sql:1-25) becomes a rewrite because parquet has no
     * in-place mutation.
     *
-    * Swap order matters for concurrent readers: rename live → `.bak`,
-    * rename tmp → live, delete `.bak`. The table is missing only
-    * between two metadata-speed renames — never for the duration of a
-    * recursive delete (the old delete-then-rename gap). A crash between
-    * the renames leaves `.bak`, which the next rewrite restores before
-    * proceeding, so the table always reappears.
+    * The swap is `PartitionedWriter.swap`, the one every table rewrite
+    * uses: rename live → `__bak`, rename `__tmp` → live, delete
+    * `__bak`. The table is missing only between two metadata-speed
+    * renames — never for the duration of a recursive delete. A crash
+    * between the renames leaves `__bak`, which the next rewrite heals
+    * (`PartitionedWriter.heal`) before proceeding, so the table always
+    * reappears.
     *
     * File count is sized from actual bytes (targeting 128 MB files),
     * not hardcoded to 1: dims here are broadcast-sized today, but a dim
@@ -107,9 +108,7 @@ class GoldContext(
     val tmp = new Path(path(table) + "__tmp")
     val bak = new Path(path(table) + "__bak")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recover a crash that happened between the two renames below
-    if (!fs.exists(target) && fs.exists(bak)) fs.rename(bak, target)
-    if (fs.exists(bak)) fs.delete(bak, true)
+    PartitionedWriter.heal(fs, target, bak)
 
     df.write.mode(SaveMode.Overwrite).parquet(raw.toString)
     val hasData = fs.listStatus(raw)
@@ -130,23 +129,7 @@ class GoldContext(
     val written = spark.read.schema(df.schema).parquet(tmp.toString)
     val n = written.count()
 
-    // FileSystem.rename reports many failures by returning false, not
-    // throwing (quota, permissions, concurrent recreation of the
-    // destination) — an unchecked false here followed by the bak delete
-    // would destroy the only remaining copy of the table
-    def mustRename(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"rename $from -> $to failed")
-    val hadTable = fs.exists(target)
-    if (hadTable) mustRename(target, bak)
-    try mustRename(tmp, target)
-    catch {
-      case e: java.io.IOException =>
-        // put the live table back before surfacing the failure
-        if (hadTable && !fs.exists(target)) fs.rename(bak, target)
-        throw e
-    }
-    if (hadTable) fs.delete(bak, true)
+    PartitionedWriter.swap(fs, tmp, target, bak)
     schemas.put(table, written.schema)
     n
   }

@@ -268,10 +268,4 @@ object Monitoring {
       .write.mode(SaveMode.Append).parquet(ctx.path("_dq_results"))
     (status, results)
   }
-
-  /** Default SLA configs for the 16 registered pipelines (reference
-    * defaults: 2-minute freshness, 10-minute SLA). Facts/bridges carry
-    * event_ts; dims are covered by freshness of their source facts. */
-  def defaultConfigs: Seq[SlaConfig] =
-    Registry.all.map(s => SlaConfig(s.id, s.target))
 }

@@ -120,6 +120,48 @@ class CoreSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 1)
   }
 
+  test("PartitionedWriter appendIfAbsent into an existing table infers no schema") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft_pawi").toString + "/t"
+    def rows(ids: String*) = ids.map(i =>
+      (i, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1.0)).toDF("event_id", "event_ts", "v")
+    val keys = Seq("event_id", "event_ts")
+    PartitionedWriter.appendIfAbsent(rows("e1"), dir, "event_ts", keys)
+    val Phase = "graft.spec.phase"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(Phase)))
+          .foreach(ph => jobs.add(ph -> e.stageInfos.map(_.name)))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      // a replayed batch: every row is present, so nothing is written
+      sc.setLocalProperty(Phase, "append")
+      assert(PartitionedWriter.appendIfAbsent(rows("e1"), dir, "event_ts", keys) == 0L)
+      // a marker job after it: listener events arrive in order
+      sc.setLocalProperty(Phase, "done")
+      spark.range(1).count()
+      org.scalatest.concurrent.Eventually.eventually(
+        org.scalatest.concurrent.Eventually.timeout(
+          org.scalatest.time.Span(30, org.scalatest.time.Seconds))) {
+        assert(jobs.asScala.exists(_._1 == "done"))
+      }
+    } finally {
+      sc.setLocalProperty(Phase, null)
+      sc.removeSparkListener(listener)
+    }
+    val appendJobs = jobs.asScala.filter(_._1 == "append").map(_._2).toSeq
+    assert(appendJobs.nonEmpty)
+    assert(!appendJobs.exists(_.exists(_.startsWith("parquet at"))), appendJobs)
+    // the key-only read still recognizes the row, and lands a new one
+    assert(PartitionedWriter.appendIfAbsent(rows("e1", "e2"), dir, "event_ts", keys) == 1L)
+    assert(spark.read.parquet(dir).count() == 2)
+  }
+
   test("compactPartitions folds per-append files, content and idempotency intact") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"

@@ -11,7 +11,7 @@ import graft.SparkSpec
   * write-staged → rename live→bak → rename staged→live → delete bak.
   * A crash is just disk state, so each test EXECUTES the protocol
   * prefix up to an interruption point with the same FileSystem calls
-  * swapPartition/swapStagedPartitions make, then asserts the next
+  * PartitionedWriter.swap makes, then asserts the next
   * lifecycle entry's heal converges to exactly one copy — and that a
   * legitimate partition drop between crash and heal STAYS dropped
   * (the GDPR/TTL resurrection window). */
@@ -66,7 +66,27 @@ class StagedSwapCrashSpec extends SparkSpec {
       "heal must converge regardless of path normal form")
   }
 
-  for (sfx <- Seq("__compact", "__purge")) {
+  test("only core/PartitionedWriter.scala renames or names a staging dir") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"${root.getAbsolutePath} not found")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val owner = new java.io.File(root, "graft/core/PartitionedWriter.scala")
+    val needles = Seq(".rename(", "\"__compact\"", "\"__purge\"", "\"__merge\"")
+    val hits = for {
+      f <- files(root) if f.getCanonicalPath != owner.getCanonicalPath
+      (line, i) <- Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String]).toSeq.zipWithIndex
+      n <- needles if line.contains(n)
+    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: $n"
+    assert(hits.isEmpty, hits.mkString("\n"))
+    val own = Files.readString(owner.toPath)
+    needles.foreach(n => assert(own.contains(n), s"$n left PartitionedWriter"))
+  }
+
+  for (sfx <- Seq("__compact", "__purge", "__merge")) {
 
     test(s"crash between the renames ($sfx): heal restores the old copy, exactly once") {
       val (root, part) = freshTable()

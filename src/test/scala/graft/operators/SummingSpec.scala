@@ -106,4 +106,30 @@ class SummingSpec extends SparkSpec {
     assert(again.forall(s => s.rowsBefore == s.rowsAfter), again.toString)
     assert(after.agg(sum("n")).as[Long].collect().head == totalBefore)
   }
+
+  test("merge and ttlRollup heal another lifecycle's crash before they read") {
+    import org.apache.hadoop.fs.Path
+    val part = "event_date=2024-01-01"
+    for (sfx <- Seq("__compact", "__purge"); rollup <- Seq(false, true)) {
+      val root = Files.createTempDirectory("summing_heal_").toString + "/t"
+      Summing.appendPartials(partials(Seq(
+        (1L, "1", 3L), (1L, "1", 4L), (1L, "2", 5L))), root, "day_ts")
+      // a crash between the swap's renames: day 1's live dir sits in
+      // that lifecycle's staging dir as its bak
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val bak = new Path(root + sfx, part + ".bak")
+      fs.mkdirs(bak.getParent)
+      assert(fs.rename(new Path(root, part), bak))
+      val stats =
+        if (rollup) Summing.ttlRollup(spark, root,
+          java.time.LocalDate.parse("2024-01-03"),
+          rollupKeys = Seq("key"), measureCols = Seq("n"), tsCol = "day_ts")
+        else Summing.merge(spark, root, Seq("key"), Seq("n"), "day_ts")
+      val label = s"$sfx, ${if (rollup) "ttlRollup" else "merge"}"
+      assert(stats.map(s => (s.partition, s.rowsBefore, s.rowsAfter))
+        .contains((part, 2L, 1L)), s"$label: $stats")
+      assert(spark.read.parquet(root).agg(sum("n")).as[Long].collect().head == 12L, label)
+      assert(!fs.exists(bak), label)
+    }
+  }
 }
