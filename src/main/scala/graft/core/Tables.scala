@@ -54,9 +54,9 @@ object Tables {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     implicit val ec: ExecutionContext = ExecutionContext.global
-    // register what the directory HAS: the bench's synthetic-scale
-    // dirs materialize only the table under test (events), and a
-    // query that never touches the absent tables must still run.
+    // register what the directory HAS: a directory may hold only
+    // some of the tables, and a query that never touches the absent
+    // ones must still run.
     // Presence goes through the Hadoop FileSystem API so hdfs:///s3a:/
     // sfDirs resolve too (java.io.File would silently skip them all).
     val hconf = spark.sessionState.newHadoopConf()

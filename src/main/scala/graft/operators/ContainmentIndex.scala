@@ -27,7 +27,7 @@ import graft.core.BatchSink
   *    aggregate semi-joins the read against the batch's distinct gram
   *    set FIRST (aggregation cost is O(batch-gram postings), never
   *    O(horizon postings)), and the scan over-fetch ratio is a
-  *    first-class receipt ([[probeCensus]], recorded by the bench).
+  *    first-class receipt ([[probeCensus]]).
   *    The IO itself is bounded by `sinceBatch` horizons and by more
   *    buckets (default 2048) for narrow batches.
   *  - `docs/` — one `(__id, __sh)` row per document (full sorted gram
@@ -315,7 +315,7 @@ object ContainmentIndex {
     * that belong to the batch's own grams). The second number is what
     * the df aggregate actually shuffles after the semi-join cut; the
     * ratio second/first is the bucket-sharing over-fetch the scaladoc
-    * used to overclaim away. Recorded per round by the bench (l116c). */
+    * used to overclaim away. */
   def probeCensus(newDocs: DataFrame, textCol: String, idCol: String,
       root: String, sinceBatch: Option[Long] = None): (Long, Long) = {
     val spark = newDocs.sparkSession

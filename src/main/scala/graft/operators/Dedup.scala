@@ -681,23 +681,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Bench receipt hook: (candidate_pairs, verified_pairs) of one
-    * PPJoin run — candidates from [[prefixCandidates]], survivors
-    * after the exact verify. */
-  private[graft] def prefixJoinCensus(df: DataFrame, textCol: String,
-      idCol: String, threshold: Double, shingleN: Int = 2): (Long, Long) = {
-    val prepped = preppedShingles(df, textCol, idCol, shingleN)
-    try {
-      val cand = prefixCandidates(prepped, threshold).cache()
-      try {
-        val nCand = cand.count()
-        val nVerified = verifyJaccard(cand, prepped)
-          .filter(col("jaccard") >= threshold).count()
-        (nCand, nVerified)
-      } finally { cand.unpersist(); () }
-    } finally { prepped.unpersist(); () }
-  }
-
   /** Benchmark decontamination: for every (corpus doc, benchmark item)
     * pair sharing n-grams, the containment score
     * |grams(bench) ∩ grams(doc)| / |grams(bench)| — the asymmetric
@@ -1261,9 +1244,9 @@ object Dedup {
   }
 
   /** Directional prefix-filter candidates BEFORE the exact verify —
-    * package-visible so the bench can receipt the candidate volume next
-    * to the wall time (the l19c contract: a candidate blowup is the one
-    * way this operator degrades, and the receipt makes it visible).
+    * package-visible so [[containmentCensus]] can receipt the candidate
+    * volume next to the wall time (a candidate blowup is the one way
+    * this operator degrades, and the receipt makes it visible).
     * Prefix = the rarest n − ⌈t·n⌉ + 1 grams of each doc (its allowed
     * misses + 1); probe side = every kept gram, with the
     * |B| ≥ ⌈t·|A|⌉ length filter (B must hold the intersection). */
@@ -1298,8 +1281,8 @@ object Dedup {
       .filter(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"), col("containment"))
 
-  /** Bench receipt hook: (candidate_pairs, verified_pairs) of one
-    * containment run — the l114 twin of [[prefixJoinCensus]]. */
+  /** Receipt hook: (candidate_pairs, verified_pairs) of one
+    * containment run (the l114 shape; `tools.Prof` prints it). */
   private[graft] def containmentCensus(df: DataFrame, textCol: String,
       idCol: String, threshold: Double, shingleN: Int = 4,
       maxDf: Int = 64): (Long, Long) = {

@@ -35,7 +35,7 @@ object Monitoring {
   def freshnessMinutes(ctx: GoldContext, table: String,
       asOfMillis: Long = System.currentTimeMillis()): Option[Double] = {
     if (!ctx.exists(table)) return None
-    val df = ctx.spark.read.parquet(ctx.path(table))
+    val df = ctx.read(table)
     if (!df.columns.contains("event_ts")) return None
     val row = df.agg(max("event_ts")).collect().head
     Option(row.getTimestamp(0)).map(ts =>
@@ -45,14 +45,16 @@ object Monitoring {
   /** Row volume per event_date partition — feed for volume-anomaly
     * alerting (monitoring.volume_anomalies). */
   def dailyVolume(ctx: GoldContext, table: String): DataFrame = {
-    val df = ctx.spark.read.parquet(ctx.path(table))
+    val df = ctx.read(table)
     df.groupBy("event_date").agg(count(lit(1)).as("rows"))
       .orderBy("event_date")
   }
 
   /** Schema drift: columns that differ between the table on disk and the
     * expected schema (monitoring.schema_drift's expected_columns check).
-    * Returns (missing, unexpected, typeChanged). */
+    * Returns (missing, unexpected, typeChanged). The one check that
+    * infers from disk: every other one reads through [[GoldContext.read]],
+    * whose schema is resolved once per context. */
   def schemaDrift(ctx: GoldContext, table: String,
       expected: StructType): (Seq[String], Seq[String], Seq[String]) = {
     val actual = ctx.spark.read.parquet(ctx.path(table)).schema
@@ -120,7 +122,7 @@ object Monitoring {
     if (!ctx.exists(cfg.table)) return None
     // one read: the loaded frame serves both the column check and the
     // per-partition counts (dailyVolume would re-list and re-read)
-    val df = ctx.spark.read.parquet(ctx.path(cfg.table))
+    val df = ctx.read(cfg.table)
     if (!df.columns.contains(graft.core.PartitionedWriter.DateCol)) return None
     val daily = df.groupBy(graft.core.PartitionedWriter.DateCol)
       .agg(count(lit(1)).as("rows"))
@@ -148,7 +150,7 @@ object Monitoring {
       asOfMillis: Long = System.currentTimeMillis()): Seq[Alert] = {
     val ledger =
       if (ctx.exists("_run_ledger"))
-        Some(ctx.spark.read.parquet(ctx.path("_run_ledger")))
+        Some(ctx.read("_run_ledger"))
       else None
     configs.flatMap { cfg =>
       val fresh = freshnessMinutes(ctx, cfg.table, asOfMillis).toSeq.collect {
@@ -248,7 +250,7 @@ object Monitoring {
     * table, persisted as one row per run with a JSON result blob. */
   def dqCheck(ctx: GoldContext, pipelineId: String, table: String,
       checks: Seq[(String, DataFrame => Boolean)]): (String, Seq[(String, Boolean)]) = {
-    val df = ctx.spark.read.parquet(ctx.path(table))
+    val df = ctx.read(table)
     val results = checks.map { case (name, fn) => name -> fn(df) }
     val status = if (results.forall(_._2)) "pass" else "fail"
     // check names are caller-supplied free text — escape them or the

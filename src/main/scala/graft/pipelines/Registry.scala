@@ -259,15 +259,12 @@ object Registry {
       // cadence tick must be attributable from the artifact (which
       // pipeline, and was it plan time, box load, or GC) without a
       // rerun — wall alone cannot say
-      val cpu0 = graft.core.JvmStats.procCpuSec
-      val gc0 = graft.core.JvmStats.gcSec
-      val t0 = System.nanoTime()
-      val appended = s.run(ctx, w)
-      val after = ctx.count(s.target)
-      RunStats(s.id, s.target, start, end,
-        before, appended, after, (System.nanoTime() - t0) / 1000000L,
-        ((graft.core.JvmStats.procCpuSec - cpu0) * 1000).toLong,
-        ((graft.core.JvmStats.gcSec - gc0) * 1000).toLong)
+      val ((appended, after), rc) = graft.core.JvmStats.receiptOf {
+        val appended = s.run(ctx, w)
+        (appended, ctx.count(s.target))
+      }
+      RunStats(s.id, s.target, start, end, before, appended, after,
+        (rc.wall * 1000).toLong, (rc.cpu * 1000).toLong, (rc.gc * 1000).toLong)
     }
 
     // a pool per call, its threads started from this one: they inherit

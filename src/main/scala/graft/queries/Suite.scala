@@ -7957,8 +7957,8 @@ object Suite {
         // type at read, estimate pinned inside the sketch's error
         // band of the oracled exact count — at 100 TB the daily
         // states are all that's ever re-read
-        // events only (not registerAll): the synth growth rehearsal
-        // points this query at a dir that materializes just events
+        // events only (not registerAll): the query runs on any dir
+        // that holds an events table
         t(s, d, "events").createOrReplaceTempView("events")
         s.sql("""WITH states AS (
                  |  SELECT event_type, date_format(ts, 'yyyy-MM-dd')

@@ -71,4 +71,24 @@ class CompactLineSpec extends AnyFunSuite {
     assert(!line.contains("receipts"))
     assert(!line.contains("\"reps\":["))
   }
+
+  test("a run where every query fails sheds failed names until the line fits") {
+    // a wrong SF dir fails all 310 queries: the failed list alone is
+    // ~14 KB, and the capture window would cut the line's head off
+    val names = (1 to 310).map(i => f"q$i%03d_" + "failing_query_long_name" * 2)
+    val line = Bench.compactLine(
+      total = 0.0, sfDir = "/no/such/sf", reps = 3,
+      nQueries = 310, nOk = 0,
+      failed = names.map("\"" + _ + "\"").mkString("[", ",", "]"),
+      failedReps = 930, heavy0 = Nil,
+      e2eCompact = e2eWorst, e2eStreamCompact = e2eStreamWorst,
+      envJson = envWorst)
+    assert(line.length <= 1800, s"compact line ${line.length} chars")
+    val node = mapper.readTree(line)
+    val kept = node.get("failed")
+    assert(kept.size > 0 && kept.size < 310)
+    assert(node.get("failed_truncated_to").asInt() == kept.size)
+    assert((0 until kept.size).map(kept.get(_).asText()) == names.take(kept.size))
+    assert(node.get("n_ok").asInt() == 0)
+  }
 }

@@ -214,9 +214,10 @@ class PipelineRunSpec extends SparkSpec {
     }
   }
 
-  test("GoldViews.registerAll after Registry.run infers no table schema") {
+  /** Names of the stages of every job `body` launches that infers a
+    * parquet schema (stage name `parquet at ...`). */
+  private def schemaJobsDuring(body: => Unit): Seq[Seq[String]] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val ctx = runAllSources()
     val Phase = "graft.spec.phase"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
     val listener = new SparkListener {
@@ -227,8 +228,8 @@ class PipelineRunSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      sc.setLocalProperty(Phase, "register")
-      assert(graft.queries.GoldViews.registerAll(ctx).size == 19)
+      sc.setLocalProperty(Phase, "body")
+      body
       // a marker job after it: listener events arrive in order
       sc.setLocalProperty(Phase, "done")
       spark.range(1).count()
@@ -241,8 +242,26 @@ class PipelineRunSpec extends SparkSpec {
       sc.setLocalProperty(Phase, null)
       sc.removeSparkListener(listener)
     }
-    val schemaJobs = jobs.asScala.filter { case (ph, stages) =>
-      ph == "register" && stages.exists(_.startsWith("parquet at"))
+    jobs.asScala.toSeq.collect { case ("body", stages)
+      if stages.exists(_.startsWith("parquet at")) => stages }
+  }
+
+  test("GoldViews.registerAll after Registry.run infers no table schema") {
+    val ctx = runAllSources()
+    val schemaJobs = schemaJobsDuring {
+      assert(graft.queries.GoldViews.registerAll(ctx).size == 19)
+    }
+    assert(schemaJobs.isEmpty, schemaJobs)
+  }
+
+  test("Monitoring.checkSla infers no table schema once ctx has read the tables") {
+    val ctx = runAllSources()
+    (allTables :+ "_run_ledger").foreach(ctx.read)
+    val cfgs = Registry.all.map(sp => Monitoring.SlaConfig(sp.id, sp.target))
+    val schemaJobs = schemaJobsDuring {
+      // a day after the window: every fact is stale, so every check runs
+      assert(Monitoring.checkSla(ctx, cfgs,
+        asOfMillis = w1.end.getTime + 86400000L).nonEmpty)
     }
     assert(schemaJobs.isEmpty, schemaJobs)
   }
