@@ -47,8 +47,16 @@ object Bench {
       None
     }
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** Run `body` with a temp-dir maker, then delete every dir it made,
+    * however `body` ends. */
+  private def withTmpDirs[T](body: (String => String) => T): T = {
+    val made = scala.collection.mutable.Buffer.empty[java.io.File]
+    try body { prefix =>
+      val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+      made += d
+      d.toString
+    } finally made.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -150,14 +158,14 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_E2E_EVENTS", "200000").toLong
     val e2e: Option[ObjectNode] =
       if (only.isDefined || e2eEvents <= 0) None
-      else block("e2e")(e2eBlock(spark, e2eEvents, nCpu))
+      else block("e2e")(withTmpDirs(e2eBlock(spark, e2eEvents, nCpu, _)))
 
     // streaming curation + drift throughput: the batch-twin oracles
     // prove WHAT the streaming operators compute; this records how
     // fast the streaming machinery itself moves documents
     val e2eStream: Option[ObjectNode] =
       if (only.isDefined || sys.env.get("SPARK_GRAFT_E2E_STREAM").contains("0")) None
-      else block("e2e_stream")(e2eStreamBlock(spark, sfDir))
+      else block("e2e_stream")(withTmpDirs(e2eStreamBlock(spark, sfDir, _)))
 
     // end-of-suite AGED-JVM re-time of the heavy tail: if these match
     // the in-suite medians, suite position / JVM aging does not explain
@@ -261,7 +269,8 @@ object Bench {
   /** The e2e block: one timed pass of raw parse → bronze (through the
     * checkpointed stream), gold build, idempotent re-run, a
     * fresh-warehouse rebuild, SLA evaluation and a BI round-trip. */
-  private def e2eBlock(spark: SparkSession, events: Long, nCpu: Int): ObjectNode = {
+  private def e2eBlock(spark: SparkSession, events: Long, nCpu: Int,
+      tmpDir: String => String): ObjectNode = {
     import graft.pipelines.{GoldContext, Monitoring, Registry, TimeWindow}
     val rawDir = tmpDir("graft_e2e_raw")
     sources.SyntheticEvents.materialize(spark, rawDir, events)
@@ -427,7 +436,8 @@ object Bench {
     * idempotent sinks), its LM-gated twin, the per-batch drift monitor
     * and the preference leaderboard, each drained via AvailableNow
     * micro-batches over a checkpointed source. */
-  private def e2eStreamBlock(spark: SparkSession, sfDir: String): ObjectNode = {
+  private def e2eStreamBlock(spark: SparkSession, sfDir: String,
+      tmpDir: String => String): ObjectNode = {
     import org.apache.spark.sql.streaming.Trigger
     val docs = core.Tables.load(spark, sfDir, "documents")
       .select("doc_id", "text")

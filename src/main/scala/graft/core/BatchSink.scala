@@ -1,11 +1,13 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The one micro-batch sink: every streaming twin and every persisted
-  * index writes its batches through here.
+  * index writes its batches through here, and every persisted index
+  * reads them back through here ([[read]]), so the layout has one owner
+  * on both sides.
   *
   * Contract (the Spark twin of the reference's Kafka-engine MV +
   * ReplacingMergeTree "at-least-once in, effectively-once out"): each
@@ -35,6 +37,18 @@ object BatchSink {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(BatchCol +: subPartitionCols: _*)
       .parquet(path)
+
+  /** Read the table at `path` back, restricted to the sub-partitions
+    * `part IN touched` and, given `sinceBatch`, to batches ≥ it. Both
+    * are predicates on partition columns, so parquet skips every other
+    * directory; an empty `touched` reads no rows. */
+  def read(spark: SparkSession, path: String, part: String,
+      touched: Seq[Long], sinceBatch: Option[Long] = None): DataFrame = {
+    val all = spark.read.parquet(path)
+    val horizon = sinceBatch.fold(all)(b => all.where(col(BatchCol) >= b))
+    if (touched.isEmpty) horizon.where(lit(false))
+    else horizon.where(col(part).isin(touched: _*))
+  }
 
   /** Start `stream` with its checkpoint and trigger, running `body` on
     * every micro-batch. */

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.BatchSink
+import graft.core.{BatchSink, IndexMeta}
 
 /** Gram-partitioned persistent home for continuous containment dedupe —
   * the [[LshIndex]] posture applied to [[Dedup.selfContainmentPairs]]:
@@ -88,56 +87,23 @@ object ContainmentIndex {
 
   private def postingsPath(root: String) = s"$root/postings"
   private def docsPath(root: String) = s"$root/docs"
-  private def metaFile(root: String) =
-    new Path(s"$root/_containment_index_meta.json")
-
-  private def fileSystem(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
+  private val Meta = IndexMeta("_containment_index_meta.json")
 
   /** True only when BOTH tables exist — `docs/` is written first, so
     * every torn append state reads as "no index yet" (first batch) or
     * keeps the previous batches' consistent view (later batches, whose
     * partitions dynamic overwrite rewrites on replay). */
-  def exists(spark: SparkSession, root: String): Boolean = {
-    val fs = fileSystem(spark, root)
-    fs.exists(new Path(postingsPath(root))) &&
-      fs.exists(new Path(docsPath(root)))
-  }
+  def exists(spark: SparkSession, root: String): Boolean =
+    IndexMeta.exists(spark, postingsPath(root), docsPath(root))
 
   private def pp(g: Column, n: Int): Column = pmod(g, lit(n.toLong))
   private def dp(id: Column, n: Int): Column =
     pmod(xxhash64(id), lit(n.toLong))
 
-  private[graft] def readMeta(spark: SparkSession,
-      root: String): (Int, Int) = {
-    val fs = fileSystem(spark, root)
-    val in = fs.open(metaFile(root))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def field(k: String): Int =
-      (""""""" + k + """"\s*:\s*(\d+)""").r.findFirstMatchIn(txt) match {
-        case Some(m) => m.group(1).toInt
-        case None => sys.error(s"malformed ${metaFile(root)}: $txt")
-      }
-    (field("numBuckets"), field("shingleN"))
-  }
-
-  private def ensureMeta(spark: SparkSession, root: String, n: Int,
-      shingleN: Int): Unit = {
-    val fs = fileSystem(spark, root)
-    if (fs.exists(metaFile(root))) {
-      val (en, es) = readMeta(spark, root)
-      require(en == n && es == shingleN,
-        s"index at $root has numBuckets=$en/shingleN=$es; appending with " +
-          s"$n/$shingleN would break pruning or mix gram spaces")
-    } else {
-      fs.mkdirs(new Path(root))
-      val out = fs.create(metaFile(root), true)
-      try out.write(
-        s"""{"numBuckets":$n,"shingleN":$shingleN}""".getBytes("UTF-8"))
-      finally out.close()
-    }
-  }
+  /** The frozen `(numBuckets, shingleN)`. */
+  private[graft] def readMeta(spark: SparkSession, root: String): (Int, Int) =
+    Meta.read(spark, root, "numBuckets", "shingleN") match {
+      case Seq(n, shingleN) => (n, shingleN) }
 
   /** Per-doc distinct hashed-shingle arrays — the one tokenize pass both
     * tables and the probe's new side share. */
@@ -163,7 +129,8 @@ object ContainmentIndex {
     val sh = shingled(df, textCol, idCol, shingleN).persist()
     try {
       if (sh.count() == 0L) return
-      ensureMeta(spark, root, numBuckets, shingleN)
+      Meta.freeze(spark, root, "numBuckets" -> numBuckets,
+        "shingleN" -> shingleN)
       // docs BEFORE postings: exists() keys on both, so the torn state
       // between the two writes is indistinguishable from "batch never
       // appended" on the first batch and is rewritten in place on replay
@@ -179,24 +146,6 @@ object ContainmentIndex {
         .withColumn(PostPart, pp(col("__g"), numBuckets))
         .repartition(col(PostPart)), batchId, postingsPath(root), PostPart)
     } finally { sh.unpersist(); () }
-  }
-
-  private def prunedPostings(spark: SparkSession, root: String,
-      touched: Seq[Long], sinceBatch: Option[Long]): DataFrame = {
-    val all = spark.read.parquet(postingsPath(root))
-    val horizon = sinceBatch
-      .map(b => all.where(col(BatchCol) >= b)).getOrElse(all)
-    if (touched.isEmpty) horizon.where(lit(false))
-    else horizon.where(col(PostPart).isin(touched: _*))
-  }
-
-  private def prunedDocs(spark: SparkSession, root: String,
-      touched: Seq[Long], sinceBatch: Option[Long]): DataFrame = {
-    val all = spark.read.parquet(docsPath(root))
-    val horizon = sinceBatch
-      .map(b => all.where(col(BatchCol) >= b)).getOrElse(all)
-    if (touched.isEmpty) horizon.where(lit(false))
-    else horizon.where(col(DocPart).isin(touched: _*))
   }
 
   /** Probe arriving documents against the persisted index (plus the
@@ -234,7 +183,8 @@ object ContainmentIndex {
       // when the batch is small; a replayed batch sits in both sides →
       // the (__g, __id) collapse counts it once
       val batchGrams = newPost.select(col("__g")).distinct()
-      val allPost = prunedPostings(spark, root, touched, sinceBatch)
+      val allPost = BatchSink
+        .read(spark, postingsPath(root), PostPart, touched, sinceBatch)
         .select(col("__id"), col("__g"))
         .join(batchGrams, Seq("__g"), "left_semi")
         .unionByName(newPost).dropDuplicates("__g", "__id")
@@ -268,7 +218,8 @@ object ContainmentIndex {
       val touchedDp = candidates.select(dp(col("id_b"), n).as("__p"))
         .distinct().collect().map(_.getLong(0)).toSeq
       val bIds = candidates.select(col("id_b").as("__id")).distinct()
-      val oldDocs = prunedDocs(spark, root, touchedDp, sinceBatch)
+      val oldDocs = BatchSink
+        .read(spark, docsPath(root), DocPart, touchedDp, sinceBatch)
         .join(broadcast(bIds), Seq("__id"), "left_semi")
         // one doc row per OLD id, newest batch wins: the anti-join
         // below only removes batch-vs-history replays, so the history
@@ -325,7 +276,8 @@ object ContainmentIndex {
       val newPost = newSh.select(col("__id"), explode(col("__sh")).as("__g"))
       val touched = newPost.select(pp(col("__g"), n).as("__p")).distinct()
         .collect().map(_.getLong(0)).toSeq
-      val read = prunedPostings(spark, root, touched, sinceBatch)
+      val read = BatchSink
+        .read(spark, postingsPath(root), PostPart, touched, sinceBatch)
         .select(col("__id"), col("__g"))
       val readRows = read.count()
       val batchGramRows = read

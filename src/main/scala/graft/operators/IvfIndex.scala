@@ -1,11 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.BatchSink
-import graft.core.BatchSink.BatchCol
+import graft.core.{BatchSink, IndexMeta}
 
 /** Cell-partitioned persistent home for the IVF ANN index — the
   * similarity-search counterpart of [[LshIndex]]'s layout argument.
@@ -43,32 +41,13 @@ object IvfIndex {
 
   private def cellsPath(root: String) = s"$root/cells"
   private def centroidsPath(root: String) = s"$root/centroids"
-  private def metaFile(root: String) = new Path(s"$root/_ivf_index_meta.json")
-
-  private def fileSystem(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
+  private val Meta = IndexMeta("_ivf_index_meta.json")
 
   def exists(spark: SparkSession, root: String): Boolean =
-    fileSystem(spark, root).exists(new Path(cellsPath(root)))
+    IndexMeta.exists(spark, cellsPath(root))
 
-  private[operators] def readNlist(spark: SparkSession, root: String): Int = {
-    val fs = fileSystem(spark, root)
-    val in = fs.open(metaFile(root))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    """"nlist"\s*:\s*(\d+)""".r.findFirstMatchIn(txt) match {
-      case Some(m) => m.group(1).toInt
-      case None => sys.error(s"malformed ${metaFile(root)}: $txt")
-    }
-  }
-
-  private def writeMeta(spark: SparkSession, root: String, nlist: Int): Unit = {
-    val fs = fileSystem(spark, root)
-    fs.mkdirs(new Path(root))
-    val out = fs.create(metaFile(root), true)
-    try out.write(s"""{"nlist":$nlist}""".getBytes("UTF-8"))
-    finally out.close()
-  }
+  private[graft] def readNlist(spark: SparkSession, root: String): Int =
+    Meta.read(spark, root, "nlist").head
 
   /** Build the index: seed (optionally k-means-refine) centroids from
     * the corpus, assign every vector, persist both sides. The corpus
@@ -89,7 +68,7 @@ object IvfIndex {
     val centroids =
       if (kmeansIters == 0) seeded
       else Similarity.kmeansRefine(corpus, seeded, kmeansIters, idCol, vecCol)
-    writeMeta(spark, root, nlist)
+    Meta.write(spark, root, "nlist" -> nlist)
     centroids.write.mode(SaveMode.Overwrite).parquet(centroidsPath(root))
     appendAssigned(corpus, root, 0L, idCol, vecCol)
   }
@@ -130,13 +109,8 @@ object IvfIndex {
     * partition column is what parquet prunes at file level
     * (IvfIndexSpec asserts selectedPartitions == probed cells). */
   private[graft] def prunedCells(spark: SparkSession, root: String,
-      probed: Seq[Long], sinceBatch: Option[Long] = None): DataFrame = {
-    val all = spark.read.parquet(cellsPath(root))
-    val horizon = sinceBatch
-      .map(b => all.where(col(BatchCol) >= b)).getOrElse(all)
-    if (probed.isEmpty) horizon.where(lit(false))
-    else horizon.where(col(CellPart).isin(probed: _*))
-  }
+      probed: Seq[Long], sinceBatch: Option[Long] = None): DataFrame =
+    BatchSink.read(spark, cellsPath(root), CellPart, probed, sinceBatch)
 
   /** ANN top-k against the persisted index, with file-level pruning.
     * Equivalent to `Similarity.ivfTopK(<all cells>, centroids, queries)`

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.BatchSink
+import graft.core.{BatchSink, IndexMeta}
 
 /** Persistent IVF-PQ index — the compressed serving layout of
   * [[Similarity.ivfPqTopK]], completing the serving-index family
@@ -37,38 +36,16 @@ object IvfPqIndex {
   private def codesPath(root: String) = s"$root/codes"
   private def centroidsPath(root: String) = s"$root/centroids"
   private def codebookPath(root: String) = s"$root/codebook"
-  private def metaFile(root: String) = new Path(s"$root/_ivfpq_index_meta.json")
-
-  private def fileSystem(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
+  private val Meta = IndexMeta("_ivfpq_index_meta.json")
 
   def exists(spark: SparkSession, root: String): Boolean =
-    fileSystem(spark, root).exists(new Path(codesPath(root)))
+    IndexMeta.exists(spark, codesPath(root))
 
-  private[operators] def readMeta(spark: SparkSession,
-      root: String): (Int, Int, Int, Int) = {
-    val fs = fileSystem(spark, root)
-    val in = fs.open(metaFile(root))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def field(k: String): Int =
-      (s""""$k"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(txt) match {
-        case Some(m) => m.group(1).toInt
-        case None => sys.error(s"malformed ${metaFile(root)}: $txt")
-      }
-    (field("nlist"), field("m"), field("ksub"), field("dim"))
-  }
-
-  private def writeMeta(spark: SparkSession, root: String, nlist: Int,
-      m: Int, ksub: Int, dim: Int): Unit = {
-    val fs = fileSystem(spark, root)
-    fs.mkdirs(new Path(root))
-    val out = fs.create(metaFile(root), true)
-    try out.write(
-      s"""{"nlist":$nlist,"m":$m,"ksub":$ksub,"dim":$dim}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
+  /** The frozen `(nlist, m, ksub, dim)`. */
+  private[graft] def readMeta(spark: SparkSession,
+      root: String): (Int, Int, Int, Int) =
+    Meta.read(spark, root, "nlist", "m", "ksub", "dim") match {
+      case Seq(nlist, m, ksub, dim) => (nlist, m, ksub, dim) }
 
   /** Build: seed (optionally refine) IVF centroids AND the PQ codebook
     * from the corpus, then land the corpus as batch 0 of encoded,
@@ -88,7 +65,8 @@ object IvfPqIndex {
       else Similarity.kmeansRefine(corpus, seeded, kmeansIters, idCol, vecCol)
     val codebook = Similarity.pqTrain(corpus, m, ksub, dim, pqIters,
       idCol, vecCol)
-    writeMeta(spark, root, nlist, m, ksub, dim)
+    Meta.write(spark, root, "nlist" -> nlist, "m" -> m, "ksub" -> ksub,
+      "dim" -> dim)
     cents.write.mode(SaveMode.Overwrite).parquet(centroidsPath(root))
     codebook.write.mode(SaveMode.Overwrite).parquet(codebookPath(root))
     appendEncoded(corpus, root, 0L, idCol, vecCol)
@@ -105,8 +83,7 @@ object IvfPqIndex {
   def append(newVecs: DataFrame, root: String, batchId: Long,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     require(batchId > 0, "batch 0 is the build corpus; append with id > 0")
-    readMeta(newVecs.sparkSession, root)
-    appendEncoded(newVecs, root, batchId, idCol, vecCol)
+    appendEncoded(newVecs, root, batchId, idCol, vecCol) // reads meta first
   }
 
   /** Replay path for the streaming twin ([[graft.streaming.AnnStream]]):
@@ -134,11 +111,8 @@ object IvfPqIndex {
   }
 
   private[graft] def prunedCodes(spark: SparkSession, root: String,
-      probed: Seq[Long]): DataFrame = {
-    val all = spark.read.parquet(codesPath(root))
-    if (probed.isEmpty) all.where(lit(false))
-    else all.where(col(CellPart).isin(probed: _*))
-  }
+      probed: Seq[Long]): DataFrame =
+    BatchSink.read(spark, codesPath(root), CellPart, probed)
 
   /** ANN top-k against the persisted index: probe → pruned compressed
     * scan → ADC → exact rerank against `corpus` (the raw source-of-

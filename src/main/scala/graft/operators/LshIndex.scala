@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.BatchSink
+import graft.core.{BatchSink, IndexMeta}
 
 /** Bucket-partitioned persistent home for [[Dedup.buildIndex]] output —
   * the layout that makes continuous dedupe IO-incremental, not just
@@ -59,51 +58,21 @@ object LshIndex {
 
   private def membersPath(root: String) = s"$root/members"
   private def gramsPath(root: String) = s"$root/grams"
-  private def metaFile(root: String) = new Path(s"$root/_lsh_index_meta.json")
-
-  private def fileSystem(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
+  private val Meta = IndexMeta("_lsh_index_meta.json")
 
   /** True only when BOTH tables exist — `grams/` is written first, so
     * a crash between the first batch's two table writes reads as "no
     * index yet" and the replay takes the clean first-append path
     * instead of probing a half-written index (the [[ContainmentIndex]]
     * torn-first-batch contract). */
-  def exists(spark: SparkSession, root: String): Boolean = {
-    val fs = fileSystem(spark, root)
-    fs.exists(new Path(membersPath(root))) &&
-      fs.exists(new Path(gramsPath(root)))
-  }
+  def exists(spark: SparkSession, root: String): Boolean =
+    IndexMeta.exists(spark, membersPath(root), gramsPath(root))
 
   private def pb(bh: Column, n: Int): Column = pmod(bh, lit(n.toLong))
   private def gp(id: Column, n: Int): Column = pmod(xxhash64(id), lit(n.toLong))
 
   private[graft] def readNumBuckets(spark: SparkSession,
-      root: String): Int = {
-    val fs = fileSystem(spark, root)
-    val in = fs.open(metaFile(root))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    """"numBuckets"\s*:\s*(\d+)""".r.findFirstMatchIn(txt) match {
-      case Some(m) => m.group(1).toInt
-      case None => sys.error(s"malformed ${metaFile(root)}: $txt")
-    }
-  }
-
-  private def ensureMeta(spark: SparkSession, root: String, n: Int): Unit = {
-    val fs = fileSystem(spark, root)
-    if (fs.exists(metaFile(root))) {
-      val existing = readNumBuckets(spark, root)
-      require(existing == n,
-        s"index at $root is partitioned with numBuckets=$existing; " +
-          s"append/probe with $n would defeat partition pruning")
-    } else {
-      fs.mkdirs(new Path(root))
-      val out = fs.create(metaFile(root), true)
-      try out.write(s"""{"numBuckets":$n}""".getBytes("UTF-8"))
-      finally out.close()
-    }
-  }
+      root: String): Int = Meta.read(spark, root, "numBuckets").head
 
   /** Append one batch of [[Dedup.buildIndex]] output. Idempotent on
     * `batchId`: both tables use dynamic partition overwrite, so an
@@ -121,7 +90,7 @@ object LshIndex {
     // costs nothing, so the emptiness probe runs once per index
     // lifetime, not once per batch
     if (!exists(spark, root) && index.isEmpty) return
-    ensureMeta(spark, root, numBuckets)
+    Meta.freeze(spark, root, "numBuckets" -> numBuckets)
     BatchSink.write(index.select(col("__id"), col("__sh"))
       .withColumn(GramPart, gp(col("__id"), numBuckets)),
       batchId, gramsPath(root), GramPart)
@@ -135,25 +104,13 @@ object LshIndex {
     * `IN` on the partition column is what parquet prunes at file level
     * (PlanShapeSpec asserts selectedPartitions == touched). */
   private[graft] def prunedMembers(spark: SparkSession, root: String,
-      touchedPb: Seq[Long], sinceBatch: Option[Long] = None): DataFrame = {
-    val all = spark.read.parquet(membersPath(root))
-    val horizon = sinceBatch
-      .map(b => all.where(col(BatchCol) >= b)).getOrElse(all)
-    if (touchedPb.isEmpty) horizon.where(lit(false))
-    else horizon.where(col(MemberPart).isin(touchedPb: _*))
-  }
+      touchedPb: Seq[Long], sinceBatch: Option[Long] = None): DataFrame =
+    BatchSink.read(spark, membersPath(root), MemberPart, touchedPb, sinceBatch)
 
-  /** Gram read restricted to the partitions owning the given prefixes
-    * (and, under a dedup horizon, to batches ≥ `sinceBatch` — grams
-    * are batch-partitioned first, same as members). */
+  /** [[prunedMembers]] for the gram table, by `__gp` prefix. */
   private[graft] def prunedGrams(spark: SparkSession, root: String,
-      touchedGp: Seq[Long], sinceBatch: Option[Long] = None): DataFrame = {
-    val all = spark.read.parquet(gramsPath(root))
-    val horizon = sinceBatch
-      .map(b => all.where(col(BatchCol) >= b)).getOrElse(all)
-    if (touchedGp.isEmpty) horizon.where(lit(false))
-    else horizon.where(col(GramPart).isin(touchedGp: _*))
-  }
+      touchedGp: Seq[Long], sinceBatch: Option[Long] = None): DataFrame =
+    BatchSink.read(spark, gramsPath(root), GramPart, touchedGp, sinceBatch)
 
   /** Incremental near-dup probe of a new batch against the persisted
     * index, with file-level pruning on both reads. Equivalent to

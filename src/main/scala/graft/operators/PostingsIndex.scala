@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.BatchSink
+import graft.core.{BatchSink, IndexMeta}
 
 /** Term-partitioned persistent home for the BM25 inverted index — the
   * lexical counterpart of [[IvfIndex]]'s layout argument.
@@ -42,56 +41,34 @@ object PostingsIndex {
 
   private def postingsPath(root: String) = s"$root/postings"
   private def statsPath(root: String) = s"$root/stats"
-  private def metaFile(root: String) = new Path(s"$root/_postings_meta.json")
-
-  private def fileSystem(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
+  private val Meta = IndexMeta("_postings_meta.json")
 
   def exists(spark: SparkSession, root: String): Boolean =
-    fileSystem(spark, root).exists(new Path(postingsPath(root)))
+    IndexMeta.exists(spark, postingsPath(root))
 
   def termPartition(term: Column, parts: Int): Column =
     pmod(xxhash64(term), lit(parts.toLong))
 
-  private[graft] def readParts(spark: SparkSession, root: String): Int = {
-    val fs = fileSystem(spark, root)
-    val in = fs.open(metaFile(root))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    """"parts"\s*:\s*(\d+)""".r.findFirstMatchIn(txt) match {
-      case Some(m) => m.group(1).toInt
-      case None => sys.error(s"malformed ${metaFile(root)}: $txt")
-    }
-  }
+  private[graft] def readParts(spark: SparkSession, root: String): Int =
+    Meta.read(spark, root, "parts").head
 
-  private def writeMeta(spark: SparkSession, root: String, parts: Int): Unit = {
-    val fs = fileSystem(spark, root)
-    fs.mkdirs(new Path(root))
-    val out = fs.create(metaFile(root), true)
-    try out.write(s"""{"parts":$parts}""".getBytes("UTF-8"))
-    finally out.close()
-  }
+  private val BytesPerPart = 18L << 10
 
   /** Size-derived term-partition count for [[build]] — the Par.widthFor
     * discipline applied to the index LAYOUT: a constant `parts` is
     * wrong at both ends (a tiny corpus pays `parts` directory commits
     * per batch for postings that would fit in one file; a 100 TB corpus
     * at 64 parts gets no useful pruning). One term partition per
-    * `spark.graft.postings.bytesPerPart` of source bytes (default
-    * 18 KiB — sized so the sf0.1 suite corpus derives ≈ the 32 the
-    * pruning asserts were baselined on), clamped to [8, 4096]. The
-    * floor keeps narrow-corpus pruning non-trivial; the cap bounds the
-    * per-batch file count (one file per touched partition) — raise it
-    * via conf for corpora whose serving path wants finer pruning.
-    * Unknown stats (the defaultSizeInBytes sentinel) keep the old
-    * constant default. */
+    * 18 KiB of source bytes ([[BytesPerPart]], sized so the sf0.1 suite
+    * corpus derives ≈ the 32 the pruning asserts were baselined on),
+    * clamped to [8, 4096]. The floor keeps narrow-corpus pruning
+    * non-trivial; the cap bounds the per-batch file count (one file per
+    * touched partition). Unknown stats (the defaultSizeInBytes sentinel)
+    * keep the old constant default. */
   def derivedParts(docs: DataFrame): Int = {
-    val spark = docs.sparkSession
-    val per = spark.conf.getOption("spark.graft.postings.bytesPerPart")
-      .map(_.toLong).getOrElse(18L << 10)
     val bytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
     if (bytes >= BigInt(Long.MaxValue)) 64
-    else (bytes / per).max(8).min(4096).toInt
+    else (bytes / BytesPerPart).max(8).min(4096).toInt
   }
 
   /** Build the index over the initial corpus (batch 0). `parts` is
@@ -106,7 +83,7 @@ object PostingsIndex {
     // fileless postings/ dir would flip exists() true and break schema
     // inference; the streaming twin's next non-empty batch builds
     if (docs.isEmpty) return
-    writeMeta(spark, root, parts)
+    Meta.write(spark, root, "parts" -> parts)
     appendBatch(docs, root, 0L, textCol, idCol, parts)
   }
 
@@ -157,11 +134,8 @@ object PostingsIndex {
     * on the partition column prunes at file level (PostingsIndexSpec
     * asserts selectedPartitions). */
   private[operators] def prunedPostings(spark: SparkSession, root: String,
-      tps: Seq[Long]): DataFrame = {
-    val all = spark.read.parquet(postingsPath(root))
-    if (tps.isEmpty) all.where(lit(false))
-    else all.where(col(TermPart).isin(tps: _*))
-  }
+      tps: Seq[Long]): DataFrame =
+    BatchSink.read(spark, postingsPath(root), TermPart, tps)
 
   /** BM25 top-k against the persisted index, with file-level pruning.
     * Equivalent to `Retrieval.bm25TopK(<whole corpus>, queries)` — the

@@ -89,14 +89,4 @@ object AnnStream {
     BatchCompaction.compact(spark, s"$indexPath/codes", keepRecent)
     ()
   }
-
-  def startPq(vectors: DataFrame, indexPath: String, checkpointDir: String,
-      nlist: Int, m: Int, ksub: Int, dim: Int, kmeansIters: Int = 0,
-      pqIters: Int = 0, idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
-    BatchSink.start(vectors, checkpointDir, trigger) { (batch, batchId) =>
-      processBatchPq(batch, batchId, indexPath, nlist, m, ksub, dim,
-        kmeansIters, pqIters, idCol, vecCol)
-    }
 }

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.{GraftSession, Keys, Tables}
+import graft.ingest.Fixtures
 
 /** Tiny CLI smoke-driver: loads the driver testdata through the public
   * library API and prints a few observable results. Usage:
@@ -66,16 +67,7 @@ object Smoke {
   /** Drives the bronze ingest projections over the reference fixtures. */
   def ingestDemo(spark: SparkSession): Unit = {
     import spark.implicits._
-    val payloads = Seq("data-suricata-1.json", "data-wazuh-2.json", "data-zeek-3.json")
-      .map { f =>
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(s"/root/reference/scripts/$f")), "UTF-8")
-        if (txt.contains("\"partitionID\"")) {
-          Seq(txt).toDF("raw")
-            .select(get_json_object(col("raw"), "$.value.payload"))
-            .collect().head.getString(0)
-        } else txt
-      }
+    val payloads = graft.ingest.Bronze.Sources.map(Fixtures.payload)
     val routed = graft.ingest.Bronze.route(payloads.toDF("raw"))
     routed.foreach { case (src, df) =>
       println(s"== $src (${df.count()} rows)")

@@ -4,32 +4,19 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 
 /** Golden tests over the reference's three captured events
-  * (/root/reference/scripts/data-*.json — its only concrete fixtures,
-  * FIXTURES.md §1). Envelope events feed value.payload as the raw string.
+  * ([[Fixtures]], FIXTURES.md §1 — its only concrete fixtures), each fed
+  * as its bare payload in the raw string.
   */
 class BronzeSpec extends SparkSpec {
-
-  private def payloadOf(file: String): String = {
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/root/reference/scripts/$file")), "UTF-8")
-    // envelope fixtures wrap the event at $.value.payload
-    if (txt.contains("\"partitionID\"")) {
-      import spark.implicits._
-      import org.apache.spark.sql.functions._
-      Seq(txt).toDF("raw")
-        .select(get_json_object(col("raw"), "$.value.payload"))
-        .collect().head.getString(0)
-    } else txt
-  }
 
   private def rawDf(payloads: String*): DataFrame = {
     import spark.implicits._
     payloads.toDF("raw")
   }
 
-  private lazy val suriPayload = payloadOf("data-suricata-1.json")
-  private lazy val wazuhPayload = payloadOf("data-wazuh-2.json")
-  private lazy val zeekPayload = payloadOf("data-zeek-3.json")
+  private lazy val suriPayload = Fixtures.payload("suricata")
+  private lazy val wazuhPayload = Fixtures.payload("wazuh")
+  private lazy val zeekPayload = Fixtures.payload("zeek")
   private lazy val all = rawDf(suriPayload, wazuhPayload, zeekPayload)
 
   test("router sends each fixture to exactly one bronze table") {

@@ -33,6 +33,27 @@ class NgramTokenizeOnceSpec extends SparkSpec {
     p +: kids.flatMap(nodes)
   }
 
+  /** Block until every query event posted so far has been delivered:
+    * the bus delivers in order, so once a marker action's event arrives,
+    * every earlier action's event has too. */
+  private def drainQueryEvents(): Unit = {
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val marker = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq("__drain_marker"))
+          seen.countDown()
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(marker)
+    try {
+      spark.range(1).select(lit(1).as("__drain_marker")).collect()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "query events did not drain")
+    } finally spark.listenerManager.unregister(marker)
+  }
+
   test("DSIR over a cached token frame: same values, zero re-scan, zero re-tokenize") {
     val dir = java.nio.file.Files.createTempDirectory("ngram_tk").toString
     val words = Seq("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
@@ -51,6 +72,9 @@ class NgramTokenizeOnceSpec extends SparkSpec {
         NgramLm.train(docs), k = 15, seed = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
 
+    // the listener bus is async: let the reference path's events (and
+    // their parquet scans) reach listeners before the pin starts
+    drainQueryEvents()
     val captured = ArrayBuffer[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,

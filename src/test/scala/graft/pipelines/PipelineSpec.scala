@@ -3,7 +3,7 @@ package graft.pipelines
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import graft.ingest.Bronze
+import graft.ingest.{Bronze, Fixtures}
 import org.apache.spark.sql.functions._
 
 /** Golden end-to-end tests: fixture JSON → bronze → all 16 pipelines →
@@ -283,13 +283,7 @@ class PipelineRunSpec extends SparkSpec {
   test("suricata + zeek fixtures flow through their facts and bridges") {
     val ctx = freshCtx()
     import spark.implicits._
-    val payloads = Seq("data-suricata-1.json", "data-zeek-3.json").map { f =>
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"/root/reference/scripts/$f")), "UTF-8")
-      Seq(txt).toDF("raw")
-        .select(get_json_object(col("raw"), "$.value.payload"))
-        .collect().head.getString(0)
-    }
+    val payloads = Seq("suricata", "zeek").map(Fixtures.payload)
     ingest(ctx, payloads)
     // fixtures are at 2026-01-07 / 2026-01-09 UTC
     Registry.run(ctx, TimeWindow.of("2026-01-01 00:00:00", "2026-01-31 00:00:00"))

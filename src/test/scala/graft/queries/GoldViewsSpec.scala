@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.SparkSpec
 import graft.core.PartitionedWriter
-import graft.ingest.Bronze
+import graft.ingest.{Bronze, Fixtures}
 import graft.pipelines.{GoldContext, Monitoring, Registry, TimeWindow}
 import org.apache.spark.sql.functions._
 
@@ -16,11 +16,7 @@ class GoldViewsSpec extends SparkSpec {
     val c = new GoldContext(spark, dir)
     import spark.implicits._
     // suricata fixture + synthesized variants across two days/severities
-    val base = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/scripts/data-suricata-1.json")), "UTF-8")
-    val payload = Seq(base).toDF("raw")
-      .select(get_json_object(col("raw"), "$.value.payload"))
-      .collect().head.getString(0)
+    val payload = Fixtures.payload("suricata")
     val variants = (0 until 20).map { i =>
       payload
         .replace("cl4Acqi82vNwpWOVC15Hkg", s"ev$i")
