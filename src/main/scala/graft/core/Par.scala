@@ -16,14 +16,13 @@ import org.apache.spark.sql.DataFrame
   * "fewer, larger partitions").
   *
   * [[widthFor]] derives the width from the plan's size estimate
-  * instead: ceil(bytes / bytesPerTask), clamped to [1, 2·cores].
+  * instead: ceil(bytes / BytesPerTask), clamped to [1, 2·cores].
   *  - bytes come from Catalyst's optimized-plan stats — exact file
   *    size for a parquet scan, a conservative estimate downstream;
-  *  - `bytesPerTask` (conf `spark.graft.repartition.bytesPerTask`,
-  *    default 2 MiB of source bytes ≈ 8 MiB of decoded tokens) keeps
-  *    each task big enough to amortize launch overhead yet small
-  *    enough that a CPU-heavy map stage saturates well before the
-  *    cap;
+  *  - [[BytesPerTask]] (2 MiB of source bytes ≈ 8 MiB of decoded
+  *    tokens) keeps each task big enough to amortize launch overhead
+  *    yet small enough that a CPU-heavy map stage saturates well
+  *    before the cap;
   *  - the 2·cores cap restores today's behavior at scale (a 100 TB
   *    input hits the cap, with the extra 2× for stragglers — the
   *    size-derived part only ever REDUCES the width for small
@@ -31,8 +30,7 @@ import org.apache.spark.sql.DataFrame
   */
 object Par {
 
-  val BytesPerTaskConf = "spark.graft.repartition.bytesPerTask"
-  val DefaultBytesPerTask: Long = 2L << 20
+  val BytesPerTask: Long = 2L << 20
 
   /** Byte bound for [[boundedBroadcast]]; unset (the default) trusts
     * the call site's documented boundedness contract. */
@@ -70,8 +68,6 @@ object Par {
   def widthFor(df: DataFrame, factor: Double = 1.0): Int = {
     val spark = df.sparkSession
     val cores = spark.sparkContext.defaultParallelism
-    val perTask = spark.conf.getOption(BytesPerTaskConf)
-      .map(_.toLong).getOrElse(DefaultBytesPerTask)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     // stats-less inputs (localCheckpoint/LogicalRDD, foreachBatch
     // frames) report the defaultSizeInBytes sentinel (Long.MaxValue):
@@ -80,6 +76,6 @@ object Par {
     if (bytes >= BigInt(Long.MaxValue)) return math.max(1, cores)
     val cap = BigInt(math.max(1, 2 * cores))
     val scaled = (BigDecimal(bytes) * factor).toBigInt
-    ((scaled + perTask - 1) / perTask).max(1).min(cap).toInt
+    ((scaled + BytesPerTask - 1) / BytesPerTask).max(1).min(cap).toInt
   }
 }

@@ -97,12 +97,20 @@ object PartitionedWriter {
           .select(keys.map(col).toIndexedSeq: _*)
         dated.join(existing, keys, "left_anti")
       } else dated
-    fresh.cache()
-    val n = fresh.count()
-    if (n > 0)
-      fresh.write.mode(SaveMode.Append).partitionBy(DateCol).parquet(path)
-    fresh.unpersist()
-    n
+    writeIfNonEmpty(fresh)(
+      _.write.mode(SaveMode.Append).partitionBy(DateCol).parquet(path))
+  }
+
+  /** Evaluate `rows` once for both its count and its write: cache, count,
+    * `write` only when non-empty (so a parquet dir never ends up
+    * file-less), unpersist. Returns the count. */
+  def writeIfNonEmpty(rows: DataFrame)(write: DataFrame => Unit): Long = {
+    rows.cache()
+    try {
+      val n = rows.count()
+      if (n > 0) write(rows)
+      n
+    } finally rows.unpersist()
   }
 
   def exists(spark: SparkSession, path: String): Boolean = {

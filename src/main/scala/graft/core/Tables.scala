@@ -49,25 +49,19 @@ object Tables {
   /** Register every table as a temp view (for spark.sql use). Footer
     * reads are driver-side and independent — run them concurrently
     * (10 sequential schema inferences cost ~2 s; parallel, ~the max of
-    * one). */
+    * one) on [[Runner]]. Every read runs to its end; then the first
+    * failure in table order is rethrown. */
   def registerAll(spark: SparkSession, sfDir: String): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // register what the directory HAS: a directory may hold only
-    // some of the tables, and a query that never touches the absent
-    // ones must still run.
-    // Presence goes through the Hadoop FileSystem API so hdfs:///s3a:/
-    // sfDirs resolve too (java.io.File would silently skip them all).
+    // register what the directory HAS, so a query that never touches an
+    // absent table still runs; presence goes through the Hadoop
+    // FileSystem API so hdfs:///s3a:/ sfDirs resolve too
     val hconf = spark.sessionState.newHadoopConf()
     val present = all.filter { n =>
       val p = new org.apache.hadoop.fs.Path(s"$sfDir/$n.parquet")
       p.getFileSystem(hconf).exists(p)
     }
-    val fs = present.map(n => Future {
-      load(spark, sfDir, n).createOrReplaceTempView(n)
-    })
-    Await.result(Future.sequence(fs), 5.minutes)
-    ()
+    Runner.run(present.map(n => Runner.Task(n, Nil, () =>
+      load(spark, sfDir, n).createOrReplaceTempView(n))), present.size)
+      .foreach(_.get)
   }
 }

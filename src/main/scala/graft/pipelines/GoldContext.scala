@@ -74,12 +74,10 @@ class GoldContext(
     if (exists(table)) read(table)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
-  /** Append new dim rows (C1 insert-if-absent output). */
-  def appendDim(table: String, rows: DataFrame): Long = {
-    val n = rows.count()
-    if (n > 0) rows.write.mode(SaveMode.Append).parquet(path(table))
-    n
-  }
+  /** Append new dim rows (C1 insert-if-absent output), evaluated once. */
+  def appendDim(table: String, rows: DataFrame): Long =
+    PartitionedWriter.writeIfNonEmpty(rows)(
+      _.write.mode(SaveMode.Append).parquet(path(table)))
 
   /** Full rewrite of a dim table: write temp, compact to size-based
     * file count, two-step swap. The SCD2 "ALTER TABLE UPDATE" close-step

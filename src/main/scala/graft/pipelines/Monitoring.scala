@@ -253,18 +253,11 @@ object Monitoring {
     val df = ctx.read(table)
     val results = checks.map { case (name, fn) => name -> fn(df) }
     val status = if (results.forall(_._2)) "pass" else "fail"
-    // check names are caller-supplied free text — escape them or the
-    // persisted blob stops being JSON
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val json = results.map { case (n, ok) => s""""${esc(n)}":$ok""" }
-      .mkString("{", ",", "}")
+    // check names are caller-supplied free text: Jackson escapes them
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().createObjectNode()
+    results.foreach { case (n, ok) => json.put(n, ok) }
     import ctx.spark.implicits._
-    Seq((pipelineId, status, json))
+    Seq((pipelineId, status, json.toString))
       .toDF("pipeline_id", "status", "results_json")
       .withColumn("run_ts", current_timestamp())
       .write.mode(SaveMode.Append).parquet(ctx.path("_dq_results"))

@@ -1,20 +1,20 @@
 package graft.pipelines
 
-import scala.collection.mutable
-import scala.util.{Failure, Success, Try}
+import scala.util.Success
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
+
+import graft.core.Runner
 
 /** Metadata-driven pipeline registry + dependency-driven runner — the
   * Spark re-expression of the reference's Airflow DAG generator
   * (/root/reference/airflow/dags/generator/gold_pipeline.py,
   * gold_pipelines.yml, postgres/init/10_metadata.sql): pipelines are
   * data (id, dependsOn, run-function), the runner resolves the window,
-  * starts each pipeline as soon as its dependencies have finished, with
-  * at most [[MaxInFlight]] running at once (the DAG's `max_active_tasks`
-  * 8, BASELINE.md:19), and writes a run ledger with before/after row
-  * counts (the reference's monitoring probes, gold_pipeline.py:221-280).
+  * runs the pipelines as a DAG, at most [[MaxInFlight]] at once, and
+  * writes a run ledger with before/after row counts (the reference's
+  * monitoring probes, gold_pipeline.py:221-280).
   */
 object Registry {
 
@@ -238,27 +238,20 @@ object Registry {
     runSpecs(ctx, w, specs, only)
   }
 
-  /** The runner behind [[run]], over any specs. A pipeline starts once
-    * all of its selected dependencies have finished; a dependency left
-    * out by `only` does not gate. If a pipeline fails, its transitive
-    * dependents never start, every other pipeline still runs to the
-    * end, the finished ones' ledger rows are appended, and then the
-    * first failure in topo order is rethrown. Stats and ledger rows
-    * come in topo order, whatever order the pipelines finish in. */
+  /** [[run]] over any specs, in topo order on [[Runner]]: a dependency
+    * left out by `only` does not gate. The finished pipelines' ledger rows
+    * are appended, then the first failure in topo order is rethrown. */
   private[pipelines] def runSpecs(ctx: GoldContext, w: TimeWindow,
       specs: Seq[PipelineSpec], only: Option[Set[String]]): Seq[RunStats] = {
     val selected = topoOrder(specs).filter(s => only.forall(_.contains(s.id)))
     val ids = selected.map(_.id).toSet
-    val deps = selected.map(s => s.id -> s.dependsOn.filter(ids)).toMap
     // formatted here, once: SimpleDateFormat is not thread-safe
     val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd HH:mm:ss.SSS")
     val (start, end) = (fmt.format(w.start), fmt.format(w.end))
     def runOne(s: PipelineSpec): RunStats = {
       val before = ctx.count(s.target)
-      // per-pipeline run condition in the ledger itself: one slow
-      // cadence tick must be attributable from the artifact (which
-      // pipeline, and was it plan time, box load, or GC) without a
-      // rerun — wall alone cannot say
+      // the run condition goes in the ledger, so a slow tick is explained
+      // from the artifact (plan time, box load or GC) without a rerun
       val ((appended, after), rc) = graft.core.JvmStats.receiptOf {
         val appended = s.run(ctx, w)
         (appended, ctx.count(s.target))
@@ -266,43 +259,12 @@ object Registry {
       RunStats(s.id, s.target, start, end, before, appended, after,
         (rc.wall * 1000).toLong, (rc.cpu * 1000).toLong, (rc.gc * 1000).toLong)
     }
-
-    // a pool per call, its threads started from this one: they inherit
-    // the caller's Spark local properties (job group, description)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(MaxInFlight)
-    val completions = new java.util.concurrent.ExecutorCompletionService[(String, Try[RunStats])](pool)
-    val results = mutable.Map.empty[String, Try[RunStats]]
-    val blocked = mutable.Set.empty[String]
-    try {
-      var waiting = selected
-      var running = 0
-      while (waiting.nonEmpty || running > 0) {
-        // ready: every selected dependency has finished or is blocked;
-        // a failed or blocked dependency blocks its dependents in turn
-        val (ready, rest) = waiting.partition(s =>
-          deps(s.id).forall(d => results.contains(d) || blocked(d)))
-        ready.foreach { s =>
-          if (deps(s.id).exists(d => blocked(d) || results(d).isFailure)) blocked += s.id
-          else {
-            completions.submit(() => (s.id, Try(runOne(s))))
-            running += 1
-          }
-        }
-        waiting = rest
-        if (running > 0) {
-          val (id, r) = completions.take().get()
-          results(id) = r
-          running -= 1
-        }
-      }
-    } finally pool.shutdown()
-
-    val outcomes = selected.flatMap(s => results.get(s.id))
+    val outcomes = Runner.run(selected.map(s =>
+      Runner.Task(s.id, s.dependsOn.filter(ids), () => runOne(s))), MaxInFlight)
     val stats = outcomes.collect { case Success(st) => st }
     val ledger = ctx.spark.createDataFrame(stats)
       .withColumn("run_at", current_timestamp())
     ledger.write.mode(SaveMode.Append).parquet(ctx.path("_run_ledger"))
-    outcomes.collectFirst { case Failure(e) => throw e }
-    stats
+    outcomes.map(_.get)
   }
 }

@@ -1,14 +1,10 @@
 package graft.streaming
 
-import java.util.concurrent.{Callable, Executors}
-
-import scala.util.{Failure, Try}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.{BatchSink, PartitionedWriter}
+import graft.core.{BatchSink, PartitionedWriter, Runner}
 import graft.ingest.Bronze
 
 /** Continuous bronze ingest — the Structured Streaming re-expression of
@@ -89,35 +85,24 @@ object BronzeStream {
 
   /** The MV fan-out of one batch of raw JSON: the batch is cached once
     * and its three [[Bronze.route]] projections are appended to
-    * `bronze_<source>` at the same time (partitioned by event_date and
-    * sorted for scan locality). Each source's sort-and-write stage is a
-    * single task, so one write at a time would leave cores idle. Every
-    * write runs to its end; then the first failure in source order is
-    * rethrown, which fails the batch. Returns the sources that had rows. */
+    * `bronze_<source>` (by event_date, sorted for scan locality) at the
+    * same time on [[Runner]]: each sort-and-write stage is one task, so
+    * one write at a time would leave cores idle. Every write runs to its
+    * end; then the first failure in source order is rethrown, which
+    * fails the batch. Returns the sources that had rows. */
   def fanOut(raw: DataFrame, warehouseDir: String): Seq[String] = {
     val cached = raw.cache()
-    val routed = Bronze.route(cached).toSeq
-    // a pool per batch, its threads started from this one: they inherit
-    // the caller's Spark local properties (a stream's job group)
-    val pool = Executors.newFixedThreadPool(routed.size)
     try {
-      val writes = routed.map { case (src, df) =>
-        val write: Callable[Try[Option[String]]] = () => Try {
+      val writes = Bronze.route(cached).toSeq.map { case (src, df) =>
+        Runner.Task(src, Nil, () =>
           if (df.isEmpty) None
           else {
             PartitionedWriter.append(df, s"$warehouseDir/bronze_$src",
               "event_ts", Seq("event_ts", "event_id"))
             Some(src)
-          }
-        }
-        pool.submit(write)
+          })
       }
-      val outcomes = writes.map(_.get())
-      outcomes.collectFirst { case Failure(e) => throw e }
-      outcomes.flatMap(_.get)
-    } finally {
-      pool.shutdown()
-      cached.unpersist()
-    }
+      Runner.run(writes, writes.size).flatMap(_.get)
+    } finally cached.unpersist()
   }
 }

@@ -18,10 +18,13 @@ class GoldViewsSpec extends SparkSpec {
     // suricata fixture + synthesized variants across two days/severities
     val payload = Fixtures.payload("suricata")
     val variants = (0 until 20).map { i =>
+      // Bronze.suricata reads @timestamp first; suricata.timestamp is its
+      // fallback, so both get the variant's hour
+      val ts = f"2026-01-0${7 + i % 2}%dT$i%02d:00:00.000"
       payload
         .replace("cl4Acqi82vNwpWOVC15Hkg", s"ev$i")
-        .replace("2026-01-07T02:43:59.077361+0000",
-          f"2026-01-0${7 + i % 2}%dT0$i%02d:00:00.000+0000".replace("T024", "T04"))
+        .replace(""""@timestamp":"2026-01-07T02:43:59.077Z"""", s""""@timestamp":"${ts}Z"""")
+        .replace("2026-01-07T02:43:59.077361+0000", s"$ts+0000")
         .replace("\"severity\":3}", s""""severity":${i % 3}}""")
     }
     val wazuh = (0 until 3).map { i =>
