@@ -3,7 +3,7 @@ package graft.core
 import java.io.IOException
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -20,9 +20,13 @@ import org.apache.spark.sql.types.StructType
   * Write disciplines:
   *  - [[append]] — blind append (bronze ingest; dedupe happens on read or
   *    downstream via anti-joins).
+  *  - [[appendCounted]] — an append that returns its row count, counted
+  *    inside the write itself ([[writeCounted]]: one execution of the
+  *    plan, no cache, no count job); a zero-row append leaves the table
+  *    exactly as it was (gold dims).
   *  - [[appendIfAbsent]] — the reference's idempotent insert: one row
   *    per key from the input, anti-joined against the existing rows *in
-  *    the touched window only* before appending
+  *    the touched window only*, then [[appendCounted]]
   *    (fact_wazuh_events.sql:76-79). Reading only the window's
   *    partitions keeps the anti-join bounded regardless of table size.
   *
@@ -76,8 +80,7 @@ object PartitionedWriter {
   /** Append rows whose `keys` are not already present in the target's
     * partitions overlapping [the rows' own dates]; rows repeating a key
     * within `df` (at-least-once redeliveries) land once. Returns rows
-    * appended. An all-duplicates (or empty) input writes nothing —
-    * parquet dirs never end up file-less/schema-less. */
+    * appended, counted by the append itself ([[appendCounted]]). */
   def appendIfAbsent(df: DataFrame, path: String, tsCol: String,
       keys: Seq[String]): Long = {
     val spark = df.sparkSession
@@ -97,20 +100,36 @@ object PartitionedWriter {
           .select(keys.map(col).toIndexedSeq: _*)
         dated.join(existing, keys, "left_anti")
       } else dated
-    writeIfNonEmpty(fresh)(
-      _.write.mode(SaveMode.Append).partitionBy(DateCol).parquet(path))
+    appendCounted(fresh, path, DateCol)
   }
 
-  /** Evaluate `rows` once for both its count and its write: cache, count,
-    * `write` only when non-empty (so a parquet dir never ends up
-    * file-less), unpersist. Returns the count. */
-  def writeIfNonEmpty(rows: DataFrame)(write: DataFrame => Unit): Long = {
-    rows.cache()
-    try {
-      val n = rows.count()
-      if (n > 0) write(rows)
-      n
-    } finally rows.unpersist()
+  /** Run `write` on `rows` observed, so the write's own execution counts
+    * the rows it writes: the plan is evaluated once, with no cache and
+    * no separate count job. Returns the count. */
+  def writeCounted(rows: DataFrame)(write: DataFrame => Unit): Long = {
+    val seen = Observation()
+    write(rows.observe(seen, count(lit(1)).as("n")))
+    seen.get("n").asInstanceOf[Long]
+  }
+
+  /** Append `rows` to the table at `path`, partitioned by `partitionCols`,
+    * counted by [[writeCounted]]. A zero-row append leaves the table as
+    * it was: Spark still creates an absent table's root, and an
+    * unpartitioned append still writes one schema-only file, so the root
+    * is dropped if this append made it, and a flat table loses the files
+    * that appeared during this append (a partitioned table gets no data
+    * file, so its tree is never listed). Returns the rows appended. */
+  def appendCounted(rows: DataFrame, path: String, partitionCols: String*): Long = {
+    val (fs, root) = fsRoot(rows.sparkSession, path)
+    val existed = fs.exists(root)
+    def flat(): Set[Path] =
+      if (existed && partitionCols.isEmpty) fs.listStatus(root).map(_.getPath).toSet else Set.empty
+    val before = flat()
+    val n = writeCounted(rows)(
+      _.write.mode(SaveMode.Append).partitionBy(partitionCols: _*).parquet(path))
+    if (n == 0 && !existed) fs.delete(root, true)
+    else if (n == 0) (flat() -- before).foreach(fs.delete(_, false))
+    n
   }
 
   def exists(spark: SparkSession, path: String): Boolean = {

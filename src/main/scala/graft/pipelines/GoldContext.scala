@@ -21,14 +21,19 @@ import graft.ingest.Bronze
   * atomic-enough temp-write-and-swap; facts/bridges/bronze are
   * `event_date=`-partitioned append-only tables.
   *
-  * Every read of a warehouse table goes through [[read]], which infers
-  * the table's schema from disk once per context (a Spark job) and
-  * reads with it after that. This relies on the single-writer contract:
-  * only this context's pipelines write the tables it reads, and they
-  * never change a table's schema except through [[rewriteDim]], which
-  * records the schema it writes. A schema changed on disk by another
-  * writer is not seen here; [[Monitoring.schemaDrift]] infers from disk
-  * to catch exactly that.
+  * Every read of a warehouse table goes through [[read]], with a schema
+  * resolved once per context: recorded by the context's first write of
+  * the table (as the table reads back), else inferred from disk by the
+  * first read (a Spark job). Every gold write counts its own rows
+  * (`PartitionedWriter.writeCounted`), and [[rows]] keeps each table's
+  * row count from those counts: a table that existed before the context
+  * is counted from disk once, and a failed write makes the next [[rows]]
+  * count again. Both rely on the single-writer contract: only this
+  * context's pipelines write the tables it reads, and they never change
+  * a table's schema except through [[rewriteDim]]. A schema or row
+  * changed on disk by another writer is not seen here;
+  * [[Monitoring.schemaDrift]] infers from disk to catch exactly that,
+  * and [[count]] counts on disk.
   */
 class GoldContext(
     val spark: SparkSession,
@@ -39,14 +44,41 @@ class GoldContext(
 
   def exists(table: String): Boolean = PartitionedWriter.exists(spark, path(table))
 
-  /** table -> schema as inferred from disk by the first [[read]] */
+  /** table -> schema, recorded by this context's first write of the
+    * table or else inferred from disk by its first [[read]] */
   private val schemas = new ConcurrentHashMap[String, StructType]()
+
+  /** table -> rows it holds, kept by this context's writes */
+  private val counts = new ConcurrentHashMap[String, java.lang.Long]()
 
   /** An existing table, read with its schema resolved once per context:
     * concurrent first reads wait on one inference. */
   def read(table: String): DataFrame = {
     val schema = schemas.computeIfAbsent(table, t => spark.read.parquet(path(t)).schema)
     spark.read.schema(schema).parquet(path(table))
+  }
+
+  /** Rows `table` holds: counted from disk on first use, then kept by
+    * this context's writes (0 for an absent table). */
+  def rows(table: String): Long =
+    counts.computeIfAbsent(table, t => if (exists(t)) read(t).count() else 0L)
+
+  /** Run `write`, which writes `written` into `table` and returns how
+    * many rows it wrote. A rewrite sets the table's known count, an append
+    * adds to it, and a write that throws forgets it, so the next [[rows]]
+    * counts from disk. The schema the table is read back with
+    * (`written`'s columns, plus a partition column found from the table's
+    * directories) is recorded by a rewrite, and by an append when none is
+    * known yet. */
+  private def recorded(table: String, written: DataFrame, rewrite: Boolean)(
+      write: => Long): Long = {
+    val n = try write catch { case e: Throwable => counts.remove(table); throw e }
+    if (rewrite) counts.put(table, n)
+    else counts.computeIfPresent(table, (_, c) => Long.box(c + n))
+    def readBack(t: String) = spark.read.schema(written.schema).parquet(path(t)).schema
+    if (rewrite) schemas.put(table, readBack(table))
+    else if (exists(table)) schemas.computeIfAbsent(table, t => readBack(t))
+    n
   }
 
   /** Bronze table for a source; empty frame with the projection's schema
@@ -76,16 +108,17 @@ class GoldContext(
 
   /** Append new dim rows (C1 insert-if-absent output), evaluated once. */
   def appendDim(table: String, rows: DataFrame): Long =
-    PartitionedWriter.writeIfNonEmpty(rows)(
-      _.write.mode(SaveMode.Append).parquet(path(table)))
+    recorded(table, rows, rewrite = false)(
+      PartitionedWriter.appendCounted(rows, path(table)))
 
-  /** Full rewrite of a dim table: write temp, compact to size-based
-    * file count, two-step swap. The SCD2 "ALTER TABLE UPDATE" close-step
-    * (dim_agent_scd2.sql:1-25) becomes a rewrite because parquet has no
-    * in-place mutation.
+  /** Full rewrite of a dim table: write it once to `__tmpraw`, counting
+    * its rows in that write, resize it to a byte-derived file count only
+    * when it came out in more files than that, and swap it in. The SCD2
+    * "ALTER TABLE UPDATE" close-step (dim_agent_scd2.sql:1-25) becomes a
+    * rewrite because parquet has no in-place mutation.
     *
     * The swap is `PartitionedWriter.swap`, the one every table rewrite
-    * uses: rename live → `__bak`, rename `__tmp` → live, delete
+    * uses: rename live → `__bak`, rename the staged copy → live, delete
     * `__bak`. The table is missing only between two metadata-speed
     * renames — never for the duration of a recursive delete. A crash
     * between the renames leaves `__bak`, which the next rewrite heals
@@ -95,10 +128,10 @@ class GoldContext(
     * File count is sized from actual bytes (targeting 128 MB files),
     * not hardcoded to 1: dims here are broadcast-sized today, but a dim
     * that grows keeps scan parallelism instead of bottlenecking on one
-    * file. Compaction reads the temp parquet back — one cheap IO pass —
-    * rather than re-evaluating the (SCD2 chain) plan for a count, and
-    * reads it with the written frame's schema, so neither read-back nor
-    * the next [[read]] of the table infers it. */
+    * file. A raw copy in more files than that is read back once (with
+    * the written frame's schema, so nothing infers it) and rewritten to
+    * `__tmp`. An empty result is one schema-bearing file, which Spark's
+    * empty write already makes, so the table stays readable. */
   def rewriteDim(table: String, df: DataFrame): Long = {
     import org.apache.hadoop.fs.Path
     val target = new Path(path(table))
@@ -108,36 +141,33 @@ class GoldContext(
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     PartitionedWriter.heal(fs, target, bak)
 
-    df.write.mode(SaveMode.Overwrite).parquet(raw.toString)
-    val hasData = fs.listStatus(raw)
-      .exists(s => s.getLen > 0 && s.getPath.getName.endsWith(".parquet"))
-    if (hasData) {
-      val bytes = fs.getContentSummary(raw).getLength
+    recorded(table, df, rewrite = true) {
+      val n = PartitionedWriter.writeCounted(df)(
+        _.write.mode(SaveMode.Overwrite).parquet(raw.toString))
       val targetFileBytes = 128L << 20
-      val files = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      spark.read.schema(df.schema).parquet(raw.toString).repartition(files)
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    } else {
-      // empty result: still write one schema-bearing parquet file so the
-      // table stays readable
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], df.schema)
-        .repartition(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      val bytes = fs.getContentSummary(raw).getLength
+      val files = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
+      val staged =
+        if (fs.listStatus(raw).count(_.getPath.getName.endsWith(".parquet")) <= files) raw
+        else {
+          spark.read.schema(df.schema).parquet(raw.toString).repartition(files.toInt)
+            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+          tmp
+        }
+      PartitionedWriter.swap(fs, staged, target, bak)
+      Seq(raw, tmp).foreach(fs.delete(_, true))
+      n
     }
-    fs.delete(raw, true)
-    val written = spark.read.schema(df.schema).parquet(tmp.toString)
-    val n = written.count()
-
-    PartitionedWriter.swap(fs, tmp, target, bak)
-    schemas.put(table, written.schema)
-    n
   }
 
   /** Idempotent fact/bridge append: anti-join on `keys` within the
     * touched partitions (C2), then append. Returns rows appended. */
   def appendFact(table: String, rows: DataFrame, tsCol: String,
       keys: Seq[String]): Long =
-    PartitionedWriter.appendIfAbsent(rows, path(table), tsCol, keys)
+    recorded(table, rows, rewrite = false)(
+      PartitionedWriter.appendIfAbsent(rows, path(table), tsCol, keys))
 
+  /** Rows of `table` on disk, counted now (0 for an absent table). */
   def count(table: String): Long =
     if (exists(table)) read(table).count() else 0L
 

@@ -2,8 +2,9 @@ package graft.pipelines
 
 import scala.util.Success
 
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Runner
 
@@ -14,7 +15,9 @@ import graft.core.Runner
   * data (id, dependsOn, run-function), the runner resolves the window,
   * runs the pipelines as a DAG, at most [[MaxInFlight]] at once, and
   * writes a run ledger with before/after row counts (the reference's
-  * monitoring probes, gold_pipeline.py:221-280).
+  * monitoring probes, gold_pipeline.py:221-280). Those counts come from
+  * the writes ([[GoldContext.rows]]): each write counts its rows inside
+  * its own execution, so the ledger costs no Spark job of its own.
   */
 object Registry {
 
@@ -24,7 +27,11 @@ object Registry {
       dependsOn: Seq[String],
       run: (GoldContext, TimeWindow) => Long)
 
-  /** One `_run_ledger` row. `cpuMs`/`gcMs` are process-wide deltas over
+  /** One `_run_ledger` row. `rowsBefore`/`rowsAfter` are the target's
+    * row counts as the context's writes keep them ([[GoldContext.rows]]),
+    * equal to a count on disk under its single-writer contract; a table
+    * the context has not written yet is counted on disk once.
+    * `cpuMs`/`gcMs` are process-wide deltas over
     * this pipeline's own wall interval; pipelines run concurrently, so
     * the intervals, and these deltas, overlap between pipelines (as does
     * the per-pipeline `util` that graft.Bench derives from them). */
@@ -35,104 +42,79 @@ object Registry {
 
   /** All 16 pipelines, dependency edges per gold_pipelines.yml:13-137. */
   val all: Seq[PipelineSpec] = Seq(
-    PipelineSpec("dim_date", "dim_date", Nil, (ctx, w) => {
-      val wins = Seq("wazuh", "suricata", "zeek").map(ctx.bronzeWindow(_, w))
-      ctx.appendDim("dim_date",
-        Dims.dimDate(wins, ctx.gold("dim_date", Dims.schemas.dimDate), ctx.tz))
-    }),
-    PipelineSpec("dim_time", "dim_time", Nil, (ctx, w) => {
-      val wins = Seq("wazuh", "suricata", "zeek").map(ctx.bronzeWindow(_, w))
-      ctx.appendDim("dim_time",
-        Dims.dimTime(wins, ctx.gold("dim_time", Dims.schemas.dimTime), ctx.tz))
-    }),
-    PipelineSpec("dim_event", "dim_event", Nil, (ctx, w) =>
-      ctx.appendDim("dim_event", Dims.dimEvent(
-        ctx.bronzeWindow("wazuh", w), ctx.bronzeWindow("zeek", w),
-        ctx.gold("dim_event", Dims.schemas.dimEvent)))),
-    PipelineSpec("dim_sensor", "dim_sensor", Nil, (ctx, w) =>
-      ctx.appendDim("dim_sensor", Dims.dimSensor(
-        ctx.bronzeWindow("suricata", w), ctx.bronzeWindow("zeek", w),
-        ctx.gold("dim_sensor", Dims.schemas.dimSensor)))),
-    PipelineSpec("dim_protocol", "dim_protocol", Nil, (ctx, w) =>
-      ctx.appendDim("dim_protocol", Dims.dimProtocol(
-        ctx.bronzeWindow("suricata", w), ctx.bronzeWindow("zeek", w),
-        ctx.gold("dim_protocol", Dims.schemas.dimProtocol)))),
-    PipelineSpec("dim_signature", "dim_signature", Nil, (ctx, w) =>
-      ctx.appendDim("dim_signature", Dims.dimSignature(
-        ctx.bronzeWindow("suricata", w),
-        ctx.gold("dim_signature", Dims.schemas.dimSignature)))),
-    PipelineSpec("dim_tag", "dim_tag", Nil, (ctx, w) => {
-      val wins = Seq("wazuh", "suricata", "zeek").map(ctx.bronzeWindow(_, w))
-      ctx.appendDim("dim_tag",
-        Dims.dimTag(wins, ctx.gold("dim_tag", Dims.schemas.dimTag)))
-    }),
+    dim("dim_date", Dims.schemas.dimDate)((ctx, w, d) =>
+      Dims.dimDate(allWindows(ctx, w), d, ctx.tz)),
+    dim("dim_time", Dims.schemas.dimTime)((ctx, w, d) =>
+      Dims.dimTime(allWindows(ctx, w), d, ctx.tz)),
+    dim("dim_event", Dims.schemas.dimEvent)((ctx, w, d) =>
+      Dims.dimEvent(ctx.bronzeWindow("wazuh", w), ctx.bronzeWindow("zeek", w), d)),
+    dim("dim_sensor", Dims.schemas.dimSensor)((ctx, w, d) =>
+      Dims.dimSensor(ctx.bronzeWindow("suricata", w), ctx.bronzeWindow("zeek", w), d)),
+    dim("dim_protocol", Dims.schemas.dimProtocol)((ctx, w, d) =>
+      Dims.dimProtocol(ctx.bronzeWindow("suricata", w), ctx.bronzeWindow("zeek", w), d)),
+    dim("dim_signature", Dims.schemas.dimSignature)((ctx, w, d) =>
+      Dims.dimSignature(ctx.bronzeWindow("suricata", w), d)),
+    dim("dim_tag", Dims.schemas.dimTag)((ctx, w, d) =>
+      Dims.dimTag(allWindows(ctx, w), d)),
     PipelineSpec("dim_agent_scd2", "dim_agent", Nil, (ctx, w) =>
       runScd2(ctx, w, "dim_agent", Dims.schemas.dimAgent, Dims.agentSpec)),
     PipelineSpec("dim_host_scd2", "dim_host", Nil, (ctx, w) =>
       runScd2(ctx, w, "dim_host", Dims.schemas.dimHost, Dims.hostSpec)),
     PipelineSpec("dim_rule_scd2", "dim_rule", Nil, (ctx, w) =>
       runScd2(ctx, w, "dim_rule", Dims.schemas.dimRule, Dims.ruleSpec)),
-    PipelineSpec("fact_wazuh_events", "fact_wazuh_events",
-      Seq("dim_date", "dim_time", "dim_agent_scd2", "dim_host_scd2",
-        "dim_rule_scd2", "dim_event"), (ctx, w) => {
-        val rows = Facts.wazuh(ctx.bronzeWindow("wazuh", w),
-          ctx.gold("dim_agent", Dims.schemas.dimAgent),
-          ctx.gold("dim_host", Dims.schemas.dimHost),
-          ctx.gold("dim_rule", Dims.schemas.dimRule),
-          ctx.gold("dim_event", Dims.schemas.dimEvent), ctx.tz)
-        ctx.appendFact("fact_wazuh_events", rows, "event_ts",
-          Seq("event_id", "event_ts"))
-      }),
-    PipelineSpec("fact_suricata_events", "fact_suricata_events",
-      Seq("dim_date", "dim_time", "dim_sensor", "dim_signature", "dim_protocol"),
-      (ctx, w) => {
-        val rows = Facts.suricata(ctx.bronzeWindow("suricata", w),
-          ctx.gold("dim_sensor", Dims.schemas.dimSensor),
-          ctx.gold("dim_signature", Dims.schemas.dimSignature),
-          ctx.gold("dim_protocol", Dims.schemas.dimProtocol), ctx.tz)
-        ctx.appendFact("fact_suricata_events", rows, "event_ts",
-          Seq("event_id", "event_ts"))
-      }),
-    PipelineSpec("fact_zeek_events", "fact_zeek_events",
-      Seq("dim_date", "dim_time", "dim_sensor", "dim_protocol", "dim_event"),
-      (ctx, w) => {
-        val rows = Facts.zeek(ctx.bronzeWindow("zeek", w),
-          ctx.gold("dim_sensor", Dims.schemas.dimSensor),
-          ctx.gold("dim_protocol", Dims.schemas.dimProtocol),
-          ctx.gold("dim_event", Dims.schemas.dimEvent), ctx.tz)
-        ctx.appendFact("fact_zeek_events", rows, "event_ts",
-          Seq("event_id", "event_ts"))
-      }),
-    PipelineSpec("bridge_wazuh_event_tag", "bridge_wazuh_event_tag",
-      Seq("dim_tag", "fact_wazuh_events"), (ctx, w) =>
-        runBridge(ctx, w, "wazuh", "bridge_wazuh_event_tag")),
-    PipelineSpec("bridge_suricata_event_tag", "bridge_suricata_event_tag",
-      Seq("dim_tag", "fact_suricata_events"), (ctx, w) =>
-        runBridge(ctx, w, "suricata", "bridge_suricata_event_tag")),
-    PipelineSpec("bridge_zeek_event_tag", "bridge_zeek_event_tag",
-      Seq("dim_tag", "fact_zeek_events"), (ctx, w) =>
-        runBridge(ctx, w, "zeek", "bridge_zeek_event_tag"))
-  )
+    fact("fact_wazuh_events", Seq("dim_date", "dim_time", "dim_agent_scd2",
+        "dim_host_scd2", "dim_rule_scd2", "dim_event"))((ctx, w) =>
+      Facts.wazuh(ctx.bronzeWindow("wazuh", w),
+        ctx.gold("dim_agent", Dims.schemas.dimAgent),
+        ctx.gold("dim_host", Dims.schemas.dimHost),
+        ctx.gold("dim_rule", Dims.schemas.dimRule),
+        ctx.gold("dim_event", Dims.schemas.dimEvent), ctx.tz)),
+    fact("fact_suricata_events",
+        Seq("dim_date", "dim_time", "dim_sensor", "dim_signature", "dim_protocol"))((ctx, w) =>
+      Facts.suricata(ctx.bronzeWindow("suricata", w),
+        ctx.gold("dim_sensor", Dims.schemas.dimSensor),
+        ctx.gold("dim_signature", Dims.schemas.dimSignature),
+        ctx.gold("dim_protocol", Dims.schemas.dimProtocol), ctx.tz)),
+    fact("fact_zeek_events",
+        Seq("dim_date", "dim_time", "dim_sensor", "dim_protocol", "dim_event"))((ctx, w) =>
+      Facts.zeek(ctx.bronzeWindow("zeek", w),
+        ctx.gold("dim_sensor", Dims.schemas.dimSensor),
+        ctx.gold("dim_protocol", Dims.schemas.dimProtocol),
+        ctx.gold("dim_event", Dims.schemas.dimEvent), ctx.tz))
+  ) ++ Seq("wazuh", "suricata", "zeek").map { source =>
+    val table = s"bridge_${source}_event_tag"
+    PipelineSpec(table, table, Seq("dim_tag", s"fact_${source}_events"), (ctx, w) =>
+      ctx.appendFact(table, Facts.tagBridge(ctx.bronzeWindow(source, w),
+        ctx.gold("dim_tag", Dims.schemas.dimTag)), "event_ts",
+        Seq("event_id", "event_ts", "tag_key")))
+  }
+
+  /** An insert-if-absent dim: `build` gets the tick's context, window
+    * and the dim as it stands, and returns the rows to append. */
+  private def dim(table: String, schema: StructType)(
+      build: (GoldContext, TimeWindow, DataFrame) => DataFrame): PipelineSpec =
+    PipelineSpec(table, table, Nil, (ctx, w) =>
+      ctx.appendDim(table, build(ctx, w, ctx.gold(table, schema))))
+
+  /** An idempotent fact append, keyed on (event_id, event_ts). */
+  private def fact(table: String, dependsOn: Seq[String])(
+      rows: (GoldContext, TimeWindow) => DataFrame): PipelineSpec =
+    PipelineSpec(table, table, dependsOn, (ctx, w) =>
+      ctx.appendFact(table, rows(ctx, w), "event_ts", Seq("event_id", "event_ts")))
+
+  private def allWindows(ctx: GoldContext, w: TimeWindow): Seq[DataFrame] =
+    Seq("wazuh", "suricata", "zeek").map(ctx.bronzeWindow(_, w))
 
   private def runScd2(ctx: GoldContext, w: TimeWindow, table: String,
-      schema: org.apache.spark.sql.types.StructType,
-      spec: Dims.Scd2Spec): Long = {
-    val dim = ctx.gold(table, schema)
+      schema: StructType, spec: Dims.Scd2Spec): Long = {
     // rewriteDim returns the FULL rebuilt table count; the ledger's
     // rowsAppended must be the new-version delta, or every re-run
     // reports the whole dim as "appended" and the idempotency receipt
     // (zero rows on an identical window) can never read zero
-    val before = dim.count()
-    val next = Dims.scd2Apply(dim, ctx.bronzeWindow("wazuh", w), spec)
+    val before = ctx.rows(table)
+    val next = Dims.scd2Apply(ctx.gold(table, schema), ctx.bronzeWindow("wazuh", w), spec)
     val total = ctx.rewriteDim(table, next)
     math.max(0L, total - before)
-  }
-
-  private def runBridge(ctx: GoldContext, w: TimeWindow, source: String,
-      table: String): Long = {
-    val rows = Facts.tagBridge(ctx.bronzeWindow(source, w),
-      ctx.gold("dim_tag", Dims.schemas.dimTag))
-    ctx.appendFact(table, rows, "event_ts", Seq("event_id", "event_ts", "tag_key"))
   }
 
   /** Runtime metadata overlay for one pipeline — the knobs the reference
@@ -249,12 +231,12 @@ object Registry {
     val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd HH:mm:ss.SSS")
     val (start, end) = (fmt.format(w.start), fmt.format(w.end))
     def runOne(s: PipelineSpec): RunStats = {
-      val before = ctx.count(s.target)
+      val before = ctx.rows(s.target)
       // the run condition goes in the ledger, so a slow tick is explained
       // from the artifact (plan time, box load or GC) without a rerun
       val ((appended, after), rc) = graft.core.JvmStats.receiptOf {
         val appended = s.run(ctx, w)
-        (appended, ctx.count(s.target))
+        (appended, ctx.rows(s.target))
       }
       RunStats(s.id, s.target, start, end, before, appended, after,
         (rc.wall * 1000).toLong, (rc.cpu * 1000).toLong, (rc.gc * 1000).toLong)

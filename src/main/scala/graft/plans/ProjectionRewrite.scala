@@ -71,7 +71,7 @@ object Projections {
 
   private val registry = new ConcurrentHashMap[String, Projection]()
 
-  private[plans] def normalize(p: String): String =
+  private[graft] def normalize(p: String): String =
     new org.apache.hadoop.fs.Path(p).toUri.getPath
 
   /** Register (or replace) the projection for `basePath`; the rewrite
@@ -110,7 +110,7 @@ object Projections {
 
   def clear(): Unit = registry.clear()
 
-  private[plans] def lookup(path: String): Option[Projection] =
+  private[graft] def lookup(path: String): Option[Projection] =
     Option(registry.get(path))
 
   private[plans] def isEmpty: Boolean = registry.isEmpty

@@ -24,12 +24,23 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("a9 projection query scans the summary, never documents.parquet") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val q = queries.Suite.queries("a9_projection_rewrite")(spark, sf)
+    val base = plans.Projections.normalize(s"$sf/documents.parquet")
+    val summary = plans.Projections.normalize(
+      plans.Projections.lookup(base).getOrElse(fail("a9 registers no projection")).summaryPath)
+    // the scans' own root paths: the plan string cuts a location at
+    // spark.sql.maxMetadataStringLength characters
+    val roots = new AdaptiveSparkPlanHelper {}.collect(q.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toUri.getPath)
+    }
     val plan = planOf(q)
-    assert(plan.contains("graft_proj"),
-      s"must read the registered projection summary:\n$plan")
-    assert(!plan.contains("documents.parquet"),
-      s"base table must not be scanned:\n$plan")
+    assert(roots.nonEmpty, s"no parquet scan:\n$plan")
+    assert(roots.flatten.forall(p => p == summary || p.startsWith(summary + "/")),
+      s"must read only the registered projection summary $summary: $roots")
+    assert(!roots.flatten.exists(_.endsWith("documents.parquet")),
+      s"base table must not be scanned: $roots")
   }
 
   test("fact->dim hash-key joins broadcast (no fact shuffle)") {

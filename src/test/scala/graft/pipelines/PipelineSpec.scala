@@ -3,6 +3,7 @@ package graft.pipelines
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
+import graft.core.PartitionedWriter
 import graft.ingest.{Bronze, Fixtures}
 import org.apache.spark.sql.functions._
 
@@ -46,15 +47,21 @@ class PipelineRunSpec extends SparkSpec {
     graft.streaming.BronzeStream.fanOut(events.toDF("raw"), ctx.root)
   }
 
-  /** A warehouse where every bronze and gold table exists, built by one
-    * `Registry.run` on `ctx`. */
-  private def runAllSources(): GoldContext = {
+  /** A cold warehouse: every source ingested, no gold table yet. */
+  private def allSourcesIngested(): GoldContext = {
     val ctx = freshCtx()
     ingest(ctx, Seq(
       wazuhEvent("ev1", "2026-01-08T01:00:00.000Z", "agentA", "10.0.0.1"),
       wazuhEvent("ev2", "2026-01-08T02:00:00.000Z", "agentB", "10.0.0.2"),
       suricataEvent("su1", "2026-01-08T03:00:00.000Z"),
       zeekEvent("ze1", "2026-01-08T04:00:00.000Z")))
+    ctx
+  }
+
+  /** A warehouse where every bronze and gold table exists, built by one
+    * `Registry.run` on `ctx`. */
+  private def runAllSources(): GoldContext = {
+    val ctx = allSourcesIngested()
     Registry.run(ctx, w1)
     ctx
   }
@@ -136,6 +143,89 @@ class PipelineRunSpec extends SparkSpec {
     assert(spark.read.parquet(ctx.path("dim_x")).columns.toSeq == Seq("k", "v"))
   }
 
+  test("the run ledger's row counts equal the tables' counts on disk") {
+    val targets = Registry.all.map(_.target).distinct
+    def disk(ctx: GoldContext): Map[String, Long] = targets.map(t => t ->
+      (if (ctx.exists(t)) spark.read.parquet(ctx.path(t)).count() else 0L)).toMap
+    /** Run `w` on `ctx` and check its ledger rows against the disk
+      * counts taken just before and just after the run. */
+    def checked(ctx: GoldContext, w: TimeWindow): Seq[Registry.RunStats] = {
+      val before = disk(ctx)
+      val stats = Registry.run(ctx, w)
+      val after = disk(ctx)
+      val ledger = spark.read.parquet(ctx.path("_run_ledger"))
+      val last = ledger.filter(col("run_at") === ledger.agg(max("run_at")).head().get(0))
+        .select("target", "rowsBefore", "rowsAfter").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+      assert(last.size == 16)
+      assert(last == Registry.all.map(p => (p.target, before(p.target), after(p.target))).toSet)
+      stats
+    }
+    val ctx = freshCtx()
+    ingest(ctx, Seq(
+      wazuhEvent("l1", "2026-01-08T01:00:00.000Z", "agentA", "10.0.0.1"),
+      suricataEvent("ls1", "2026-01-08T03:00:00.000Z"),
+      zeekEvent("lz1", "2026-01-08T04:00:00.000Z")))
+    checked(ctx, w1) // cold
+    ingest(ctx, Seq(
+      wazuhEvent("l2", "2026-01-08T05:00:00.000Z", "agentA", "10.0.0.7", ruleId = "300"),
+      wazuhEvent("l3", "2026-01-08T06:00:00.000Z", "agentC", "10.0.0.3", tags = Seq("t9")),
+      suricataEvent("ls2", "2026-01-08T07:00:00.000Z")))
+    assert(checked(ctx, w1).map(_.rowsAppended).sum > 0) // a second ingest
+    val rerun = checked(ctx, w1)
+    assert(rerun.forall(s => s.rowsAppended == 0 && s.rowsBefore == s.rowsAfter),
+      rerun.mkString("\n"))
+    val fresh = new GoldContext(spark, ctx.root, ctx.tz)
+    ingest(fresh, Seq(
+      wazuhEvent("l4", "2026-01-08T13:00:00.000Z", "agentA", "10.0.0.8"),
+      zeekEvent("lz2", "2026-01-08T14:00:00.000Z")))
+    assert(checked(fresh, w2).map(_.rowsAppended).sum > 0)
+  }
+
+  test("a zero-row write leaves the table as it was") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val ctx = freshCtx()
+    val fs = new Path(ctx.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def listing(t: String): Set[(String, Long)] = {
+      val it = fs.listFiles(new Path(ctx.path(t)), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toUri.getPath, f.getLen)).toSet
+    }
+    def dim(rows: (Long, String)*) = rows.toDF("k", "v")
+    def fact(ids: String*) = ids.map(i =>
+      (i, java.sql.Timestamp.valueOf("2026-01-08 01:00:00"))).toDF("event_id", "event_ts")
+    val keys = Seq("event_id", "event_ts")
+
+    ctx.appendDim("dim_x", dim((1L, "a")))
+    ctx.appendFact("fact_x", fact("e1"), "event_ts", keys)
+    val (dimFiles, factFiles) = (listing("dim_x"), listing("fact_x"))
+    assert(ctx.appendDim("dim_x", dim()) == 0)
+    assert(listing("dim_x") == dimFiles)
+    assert(ctx.appendFact("fact_x", fact(), "event_ts", keys) == 0)
+    assert(ctx.appendFact("fact_x", fact("e1"), "event_ts", keys) == 0) // all present
+    assert(PartitionedWriter.appendIfAbsent(fact("e1"), ctx.path("fact_x"), "event_ts", keys) == 0)
+    assert(listing("fact_x") == factFiles)
+    assert(ctx.rows("dim_x") == 1 && ctx.rows("fact_x") == 1)
+
+    // into an absent table: no root is made
+    assert(ctx.appendDim("dim_y", dim()) == 0)
+    assert(ctx.appendFact("fact_y", fact(), "event_ts", keys) == 0)
+    assert(PartitionedWriter.appendIfAbsent(fact(), ctx.path("fact_z"), "event_ts", keys) == 0)
+    assert(Seq("dim_y", "fact_y", "fact_z").filter(ctx.exists).isEmpty)
+    assert(ctx.rows("dim_y") == 0 && ctx.rows("fact_y") == 0)
+
+    // an empty rewrite, of an existing and of an absent dim: one
+    // readable, schema-bearing file
+    for (t <- Seq("dim_x", "dim_w")) {
+      assert(ctx.rewriteDim(t, dim()) == 0, t)
+      assert(listing(t).count(_._1.endsWith(".parquet")) == 1, listing(t))
+      val back = spark.read.parquet(ctx.path(t))
+      assert(back.columns.toSeq == Seq("k", "v") && back.count() == 0, t)
+      assert(ctx.rows(t) == 0, t)
+    }
+  }
+
   test("SCD2 change sequence: close old version, open new, asof resolves both") {
     val ctx = freshCtx()
     // window 1: agentA @ ip .1 ; window 2: agentA moved to ip .9
@@ -214,16 +304,20 @@ class PipelineRunSpec extends SparkSpec {
     }
   }
 
-  /** Names of the stages of every job `body` launches that infers a
-    * parquet schema (stage name `parquet at ...`). */
-  private def schemaJobsDuring(body: => Unit): Seq[Seq[String]] = {
+  /** One job `body` launched: its stage names, and whether it ran inside
+    * a SQL execution (a schema inference runs outside any). */
+  private case class Job(stages: Seq[String], inSql: Boolean)
+
+  /** Every job `body` launches, on any thread it starts. */
+  private def jobsDuring(body: => Unit): Seq[Job] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val Phase = "graft.spec.phase"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Job)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(Phase)))
-          .foreach(ph => jobs.add(ph -> e.stageInfos.map(_.name)))
+        Option(e.properties).foreach(p => Option(p.getProperty(Phase)).foreach(ph =>
+          jobs.add(ph -> Job(e.stageInfos.map(_.name),
+            p.getProperty("spark.sql.execution.id") != null))))
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -242,8 +336,22 @@ class PipelineRunSpec extends SparkSpec {
       sc.setLocalProperty(Phase, null)
       sc.removeSparkListener(listener)
     }
-    jobs.asScala.toSeq.collect { case ("body", stages)
-      if stages.exists(_.startsWith("parquet at")) => stages }
+    jobs.asScala.toSeq.collect { case ("body", job) => job }
+  }
+
+  /** Names of the stages of every job `body` launches that infers a
+    * parquet schema (stage name `parquet at ...`). */
+  private def schemaJobsDuring(body: => Unit): Seq[Seq[String]] =
+    jobsDuring(body).map(_.stages).filter(_.exists(_.startsWith("parquet at")))
+
+  test("Registry.run counts rows only inside its writes and infers only bronze schemas") {
+    val ctx = allSourcesIngested()
+    val jobs = jobsDuring(Registry.run(ctx, w1))
+    val counts = jobs.filter(_.stages.exists(_.startsWith("count at")))
+    assert(counts.isEmpty, counts)
+    // writes are `parquet at ...` too, but run inside a SQL execution
+    val inference = jobs.filterNot(_.inSql)
+    assert(inference.size <= Bronze.Sources.size, inference)
   }
 
   test("GoldViews.registerAll after Registry.run infers no table schema") {
