@@ -128,6 +128,58 @@ object Dedup {
         count(lit(1)).as("n_paragraphs"))
   }
 
+  // ---- bucketed near-dup pair join -------------------------------------
+
+  /** Candidate pairs of rows that share a bucket — the one pair join
+    * behind every bucketed near-dup operator (MinHash bands, SimHash
+    * and media-hash blocks, hyperplane signatures, k-means cells).
+    * `rows` carries `__id`, the `bucket` columns and the `payload`
+    * columns; the caller caches it, so the census, both cold join
+    * sides and the star join read that one materialization.
+    *
+    * A bucket larger than `cap` would make the self-join O(bucket²)
+    * inside one task — the classic LSH-dedupe failure on a
+    * mega-duplicate cluster (identical docs share ALL buckets, so
+    * every one of their buckets is hot). One census per bucket counts
+    * it and keeps its min id as the hub, with each payload column's
+    * value at the hub (`min_by`), so star edges need no join-back.
+    * Buckets of at most `cap` members pair all-by-all; over-cap
+    * buckets switch to STAR edges (hub ↔ member): O(bucket) pairs that
+    * keep the cluster connected for [[components]], at the cost of
+    * pair-completeness *within* the hot bucket (two members close to
+    * each other but not to the hub lose their direct edge — for
+    * dedupe semantics the component is what matters). Hot buckets are
+    * rare by construction, so the hot list and its keys broadcast and
+    * the cold path's plan is the plain hash self-join.
+    *
+    * Output: (id_a, id_b, a_<p>, b_<p> for each payload column p),
+    * id_a < id_b (the hub is ≤ every member id). In a cold pair `a_`
+    * holds id_a's row, in a star pair the hub's. A pair sharing
+    * several buckets appears once per bucket; callers dedupe. */
+  private[operators] def bucketPairs(rows: DataFrame, bucket: Seq[String],
+      payload: Seq[String], cap: Int): DataFrame = {
+    val keys = bucket.map(col)
+    val hot = rows.groupBy(keys: _*)
+      .agg(count(lit(1)).as("__n"), min(col("__id")).as("__min") +:
+        payload.map(p => min_by(col(p), col("__id")).as(s"__hub$p")): _*)
+      .filter(col("__n") > cap)
+      .drop("__n")
+    val cold = rows.join(broadcast(hot.select(keys: _*)), bucket, "left_anti")
+    def pair(idA: Column, idB: Column, a: String => Column,
+        b: String => Column): Seq[Column] =
+      Seq(idA.as("id_a"), idB.as("id_b")) ++
+        payload.map(p => a(p).as(s"a_$p")) ++ payload.map(p => b(p).as(s"b_$p"))
+    val coldPairs = cold.as("l")
+      .join(cold.as("r"), bucket.map(k => col(s"l.$k") === col(s"r.$k"))
+        .reduce(_ && _) && col("l.__id") < col("r.__id"))
+      .select(pair(col("l.__id"), col("r.__id"),
+        p => col(s"l.$p"), p => col(s"r.$p")): _*)
+    val starPairs = rows.join(broadcast(hot), bucket)
+      .filter(col("__id") =!= col("__min"))
+      .select(pair(col("__min"), col("__id"), p => col(s"__hub$p"), col): _*)
+    coldPairs.unionByName(starPairs)
+  }
+
   // ---- MinHash + LSH -------------------------------------------------
 
   /** Candidate pairs (idA < idB) that share ≥1 LSH band, with their
@@ -142,30 +194,19 @@ object Dedup {
     * combines map-side, nothing materializes a per-row k×|shingles|
     * expression tree (the naive array-of-transforms formulation blows
     * up codegen and recomputes the signature per band). The pair join
-    * shuffles only (band, id); shingle sets rejoin by id at the end. */
-  /** Hot-band hardening shared by the batch and incremental pair
-    * generators: a band bucket larger than `maxBandBucket` would make
-    * the self-join O(bucket²) inside one task — the classic LSH-dedupe
-    * failure on a mega-duplicate cluster (identical docs share ALL
-    * bands, so every one of their buckets is hot). Over-cap buckets
-    * switch from all-pairs to STAR edges (bucket-min ↔ member): O(bucket)
-    * pairs that keep the cluster connected for [[components]]/
-    * [[minhashLsh]], at the cost of pair-completeness *within* the hot
-    * bucket (two docs similar to each other but not to the bucket min
-    * lose their direct edge — for dedupe semantics the component is
-    * what matters). Hot buckets are rare by construction, so the hot
-    * list broadcasts and the cold path's plan is unchanged.
+    * ([[bucketPairs]] on (band, hash), capped at `maxBandBucket`)
+    * shuffles only (band, id); shingle sets rejoin by id at the end.
     *
-    * Recall caveat, stated precisely: a star edge still passes through
-    * the caller's jaccard-threshold verify, so if EVERY bucket shared
-    * by a truly-similar pair (A, B) is hot AND neither A nor B clears
-    * the threshold against those buckets' min docs, the pair is lost
-    * to [[minhashLsh]] — the scenario is a >maxBandBucket cluster of
-    * boilerplate-dominated signatures (template pages whose shared
+    * Recall caveat of the cap, stated precisely: a star edge still
+    * passes through the jaccard verify, so if EVERY bucket shared by a
+    * truly-similar pair (A, B) is hot AND neither A nor B clears the
+    * caller's threshold against those buckets' min docs, the pair is
+    * lost to [[minhashLsh]] — the scenario is a >maxBandBucket cluster
+    * of boilerplate-dominated signatures (template pages whose shared
     * grams win every minhash slot). The remedies are a larger
     * maxBandBucket or stripping the boilerplate before shingling;
     * within-bucket all-pairs at that size is the O(cluster²) failure
-    * this cap exists to prevent.
+    * the cap exists to prevent.
     *
     * Measured (DedupRecallSpec, 40-doc boilerplate cluster tripping a
     * cap of 16 + 10 planted cold near-dup pairs): direct pair recall
@@ -204,27 +245,8 @@ object Dedup {
       .select(col("__id"), array(bandCols: _*).as("__bands"))
       .select(col("__id"), posexplode(col("__bands")).as(Seq("__b", "__bh")))
       .cache()
-    // bucket census: count + min id per (band, hash) — a cheap codegen
-    // aggregate with map-side combine over rows that are already (id,
-    // band, hash). The hot set is tiny (it takes a >maxBandBucket
-    // duplicate cluster to create one entry), so both uses broadcast.
-    val hot = banded.groupBy(col("__b"), col("__bh"))
-      .agg(count(lit(1)).as("__n"), min(col("__id")).as("__min"))
-      .filter(col("__n") > maxBandBucket)
-      .select(col("__b"), col("__bh"), col("__min"))
-    val cold = banded.join(broadcast(hot.select(col("__b"), col("__bh"))),
-      Seq("__b", "__bh"), "left_anti")
-    val coldPairs = cold.as("l")
-      .join(cold.as("r"),
-        col("l.__b") === col("r.__b") && col("l.__bh") === col("r.__bh") &&
-          col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id_a"), col("r.__id").as("id_b"))
-    // star edges: __min ≤ every member id, so id_a < id_b holds
-    val starPairs = banded.join(broadcast(hot), Seq("__b", "__bh"))
-      .filter(col("__id") =!= col("__min"))
-      .select(col("__min").as("id_a"), col("__id").as("id_b"))
-    val pairs = coldPairs.unionByName(starPairs).distinct()
-    verifyJaccard(pairs, sh)
+    verifyJaccard(
+      bucketPairs(banded, Seq("__b", "__bh"), Nil, maxBandBucket).distinct(), sh)
   }
 
   /** Persistable LSH signature index: one row per document carrying its
@@ -271,7 +293,10 @@ object Dedup {
     * membership rows. `newB` is the new batch's memberships (__new
     * true); `allB` is old ∪ new (old rows __new false).
     * Shared by [[incrementalCandidates]] (DataFrame-to-DataFrame) and
-    * [[LshIndex.probe]] (file-pruned persisted index). */
+    * [[LshIndex.probe]] (file-pruned persisted index). Keeps its own
+    * census rather than calling [[bucketPairs]]: its cold side is
+    * new × all, which bounds the probe by O(|new| + collisions) where
+    * the all × all self-join would scan every accumulated pair. */
   private[operators] def incrementalPairs(newB: DataFrame, allB: DataFrame,
       maxBandBucket: Int, materialize: Boolean = true): DataFrame = {
     // only buckets a NEW doc probes can produce pairs, so restrict the
@@ -304,7 +329,7 @@ object Dedup {
     val members = if (materialize) membersBase.persist() else membersBase
     try {
       // hot buckets switch to star edges, same scheme as
-      // [[minhashCandidates]] but honoring the "≥1 new doc per pair"
+      // [[bucketPairs]] but honoring the "≥1 new doc per pair"
       // contract: emit (min, m) only when m or the bucket min is new —
       // old↔old edges were produced by the batches that introduced them.
       val hot = members.groupBy(col("__b"), col("__bh"))
@@ -814,58 +839,34 @@ object Dedup {
     votes.select(col("__id"), sig.as("__sig"))
   }
 
-  /** Shared hot-bucket-hardened pair join over blocked signatures —
-    * `blocked` rows are (__id, __sig, __b, __bv), hash-partitioned on
-    * (__b, __bv). The same census→cap→star-edge degrade as
-    * [[minhashCandidates]]' hot bands: a block bucket larger than
-    * `maxBlockBucket` (a mega-cluster of identical/templated docs —
-    * such a cluster shares ALL blocks, so every one of its buckets is
-    * hot) would make the self-join O(bucket²) inside one task; over-cap
-    * buckets emit O(bucket) STAR edges (bucket-min ↔ member) instead.
-    * Star edges still score the EXACT Hamming distance member↔hub, so
-    * capping never emits a false pair — it loses intra-hot-bucket
-    * direct edges whose members are within `maxDistance` of each other
-    * but not of the hub; component closure is what dedupe semantics
-    * depend on, and DedupRecallSpec measures both losses on a corpus
-    * that trips the cap.
-    *
-    * Shuffle shape: the caller hands over block rows already cached —
-    * census groupBy, both cold self-join sides, and the star join read
-    * that one materialization (signatures computed once; plan-asserted
-    * in PlanShapeSpec), and any exchanges above it move only the
-    * compact (id, sig, block) rows, never text. The hot list is tiny
-    * by construction, so all three of its uses broadcast. */
-  private[operators] def blockedHammingPairs(blocked: DataFrame,
+  /** Pairs of (__id, __sig) signatures within Hamming distance
+    * `maxDistance`: each 60/64-bit signature splits into 4 blocks of
+    * `blockBits` bits and pairs that share a block bucket are scored
+    * with the exact Hamming distance. Pigeonhole: two signatures at
+    * distance ≤ 3 agree on at least one of 4 blocks, so blocking is
+    * complete to 3 — for sub-cap buckets; buckets over
+    * `maxBlockBucket` degrade to star edges ([[bucketPairs]]). Star
+    * edges still score the EXACT distance member↔hub, so capping never
+    * emits a false pair; DedupRecallSpec measures what it loses on a
+    * corpus that trips the cap. Only the compact (id, sig, block) rows
+    * shuffle, never text or media bytes (PlanShapeSpec asserts the
+    * shared cached fork). Output: (id_a, id_b, hamming), id_a < id_b. */
+  private[operators] def blockedHammingPairs(sigs: DataFrame, blockBits: Int,
       maxDistance: Int, maxBlockBucket: Int): DataFrame = {
-    val hot = blocked.groupBy(col("__b"), col("__bv"))
-      .agg(count(lit(1)).as("__n"), min(col("__id")).as("__min"),
-        min_by(col("__sig"), col("__id")).as("__hubsig"))
-      .filter(col("__n") > maxBlockBucket)
-      .select(col("__b"), col("__bv"), col("__min"), col("__hubsig"))
-    val cold = blocked.join(broadcast(hot.select(col("__b"), col("__bv"))),
-      Seq("__b", "__bv"), "left_anti")
-    val coldPairs = cold.as("l")
-      .join(cold.as("r"),
-        col("l.__b") === col("r.__b") && col("l.__bv") === col("r.__bv") &&
-          col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id_a"), col("r.__id").as("id_b"),
-        bit_count(col("l.__sig").bitwiseXOR(col("r.__sig"))).as("hamming"))
-    // the hub signature rides the broadcast hot list (min_by in the
-    // census), so star edges need no join-back; __min ≤ member ids
-    // keeps id_a < id_b by construction
-    val starPairs = blocked.join(broadcast(hot), Seq("__b", "__bv"))
-      .filter(col("__id") =!= col("__min"))
-      .select(col("__min").as("id_a"), col("__id").as("id_b"),
-        bit_count(col("__hubsig").bitwiseXOR(col("__sig"))).as("hamming"))
-    // a pair found via several blocks (cold) or several hot buckets
-    // (star) carries the same hamming both times — one distinct dedupes
-    coldPairs.unionByName(starPairs).distinct()
+    require(maxDistance <= 3, "block scheme guarantees completeness only to 3")
+    bucketPairs(blockMembers(sigs, 4, blockBits), Seq("__b", "__bv"),
+        Seq("__sig"), maxBlockBucket)
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("a___sig").bitwiseXOR(col("b___sig"))).as("hamming"))
+      // a pair found via several blocks carries the same hamming each
+      // time — one distinct dedupes
+      .distinct()
       .filter(col("hamming") <= maxDistance)
   }
 
   /** (__id, __sig, __b, __bv) block-membership rows of a signature
     * frame, repartitioned on the block key and cached. The cache is
-    * load-bearing: [[blockedHammingPairs]] reads it from four plan
+    * load-bearing: [[bucketPairs]] reads it from four plan
     * branches (census, both cold join sides, star join), and without a
     * pinned fork point Catalyst prunes each branch differently so
     * nothing — not even an explicit pre-fork repartition exchange —
@@ -879,7 +880,7 @@ object Dedup {
     * session cache registry; long-running hosts drop it between
     * queries (Bench/Verify `clearCache()` per query — the round-4
     * accumulation fix). */
-  private[operators] def blockMembers(sigs: DataFrame, nBlocks: Int,
+  private def blockMembers(sigs: DataFrame, nBlocks: Int,
       blockBits: Int): DataFrame = {
     val mask = (1L << blockBits) - 1
     val par = graft.core.Par.widthFor(sigs)
@@ -892,30 +893,18 @@ object Dedup {
   }
 
   /** [[simhashPairs]] on the portable 60-bit signature: 4×15-bit blocks
-    * (pigeonhole-complete to Hamming ≤ 3), exact Hamming verify.
-    * Buckets over `maxBlockBucket` degrade to star edges (see
-    * [[blockedHammingPairs]]). */
+    * ([[blockedHammingPairs]]). */
   def simhashPairsPortable(df: DataFrame, textCol: String, idCol: String,
-      maxDistance: Int = 3, maxBlockBucket: Int = 1024): DataFrame = {
-    require(maxDistance <= 3, "block scheme guarantees completeness only to 3")
-    blockedHammingPairs(
-      blockMembers(simhashPortable(df, textCol, idCol), 4, 15),
+      maxDistance: Int = 3, maxBlockBucket: Int = 1024): DataFrame =
+    blockedHammingPairs(simhashPortable(df, textCol, idCol), 15,
       maxDistance, maxBlockBucket)
-  }
 
-  /** Candidate pairs with Hamming distance ≤ maxDistance. Blocking on
-    * the 4 16-bit blocks guarantees completeness for maxDistance ≤ 3
-    * (pigeonhole: one block must match exactly) — for sub-cap buckets;
-    * buckets over `maxBlockBucket` degrade to star edges (see
-    * [[blockedHammingPairs]]). */
+  /** Candidate pairs with SimHash Hamming distance ≤ maxDistance (≤ 3),
+    * blocked on the 4 16-bit blocks ([[blockedHammingPairs]]). */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
-      maxDistance: Int = 3, maxBlockBucket: Int = 1024): DataFrame = {
-    require(maxDistance <= 3, "block scheme guarantees completeness only to 3")
-    blockedHammingPairs(
-      blockMembers(df.select(col(idCol).as("__id"),
-        simhash(col(textCol)).as("__sig")), 4, 16),
-      maxDistance, maxBlockBucket)
-  }
+      maxDistance: Int = 3, maxBlockBucket: Int = 1024): DataFrame =
+    blockedHammingPairs(df.select(col(idCol).as("__id"),
+      simhash(col(textCol)).as("__sig")), 16, maxDistance, maxBlockBucket)
 
   // ---- embedding-cosine near-dup -------------------------------------
 
@@ -923,50 +912,33 @@ object Dedup {
     * from random-hyperplane LSH buckets (cosine-preserving; identical
     * vectors always share a bucket), verified with exact cosine. At
     * scale only bucket collisions are scored — a thresholded
-    * all-pairs-free pipeline.
-    *
-    * Buckets over `maxBucket` (a mega-cluster of near-identical
-    * embeddings — or a glut of near-zero/templated vectors collapsing
-    * onto one 16-bit signature) degrade to STAR edges around the
-    * bucket-min vector, exactly the [[blockedHammingPairs]] /
-    * [[minhashCandidates]] scheme: O(bucket) member↔hub pairs scored
-    * with exact cosine instead of O(bucket²) all-pairs in one task.
-    * Direct pairs between hot-bucket members both far from the hub are
-    * lost (DedupRecallSpec measures it); component closure survives.
-    * The repartition-then-cache fork point (see [[blockMembers]] for
-    * why cache, not exchange reuse) means census, both cold join sides
-    * and the star join share one signature materialization; exchanges
-    * above it move (id, vec, sig) rows once each, not recomputed
-    * signatures. */
+    * all-pairs-free pipeline. Buckets over `maxBucket` (a mega-cluster
+    * of near-identical embeddings, or a glut of near-zero/templated
+    * vectors collapsing onto one 16-bit signature) degrade to star
+    * edges ([[bucketPairs]]) scored with the exact cosine to the hub;
+    * DedupRecallSpec measures the lost direct pairs. */
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, threshold: Double, bits: Int = 16, seed: Long = 42L,
       maxBucket: Int = 4096): DataFrame = {
     val sig = Similarity.hyperplaneSignature(dim, bits, seed)
     val par = graft.core.Par.widthFor(df)
+    // repartition-then-cache fork point (see [[blockMembers]] for why
+    // cache, not exchange reuse): one signature materialization
     val bucketed = df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .withColumn("__sig", sig(col("__v")))
       .repartition(par, col("__sig"))
       .cache()
-    // hub vector rides the broadcast hot list (hot buckets are rare by
-    // construction, so broadcasting a vector per hot bucket is cheap)
-    val hot = bucketed.groupBy(col("__sig"))
-      .agg(count(lit(1)).as("__n"), min(col("__id")).as("__min"),
-        min_by(col("__v"), col("__id")).as("__hubv"))
-      .filter(col("__n") > maxBucket)
-      .select(col("__sig"), col("__min"), col("__hubv"))
-    val cold = bucketed.join(broadcast(hot.select(col("__sig"))),
-      Seq("__sig"), "left_anti")
-    val coldPairs = cold.as("l")
-      .join(cold.as("r"),
-        col("l.__sig") === col("r.__sig") && col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id_a"), col("r.__id").as("id_b"),
-        Similarity.cosine(col("l.__v"), col("r.__v")).as("cosine"))
-    val starPairs = bucketed.join(broadcast(hot), Seq("__sig"))
-      .filter(col("__id") =!= col("__min"))
-      .select(col("__min").as("id_a"), col("__id").as("id_b"),
-        Similarity.cosine(col("__hubv"), col("__v")).as("cosine"))
-    coldPairs.unionByName(starPairs).filter(col("cosine") >= threshold)
+    cosinePairs(bucketPairs(bucketed, Seq("__sig"), Seq("__v"), maxBucket),
+      threshold)
   }
+
+  /** Scores [[bucketPairs]] output over the `__v` payload with exact
+    * cosine and keeps pairs at or above `threshold`: (id_a, id_b,
+    * cosine). One bucket per row, so no pair repeats. */
+  private def cosinePairs(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
+        Similarity.cosine(col("a___v"), col("b___v")).as("cosine"))
+      .filter(col("cosine") >= threshold)
 
   /** SemDeDup-style semantic duplicate pairs (Abbas et al. 2023,
     * arXiv:2303.09540): k-means cells as the candidate generator — only
@@ -979,8 +951,7 @@ object Dedup {
     * shuffles on cell id so each cell's quadratic work is local and
     * cells are ~corpus/nlist sized. Cells larger than `maxCell` (a
     * mega-cluster of boilerplate) degrade to star edges around the
-    * cell's min id — the same recall trade as [[minhashCandidates]]'
-    * hot bands, with the same caveat: transitive closure recovers
+    * cell's min id ([[bucketPairs]]): transitive closure recovers
     * same-component membership, not every individual pair. */
   def semanticDupPairs(df: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, threshold: Double,
@@ -992,27 +963,8 @@ object Dedup {
       .select(col(idCol).as("__id"), col(vecCol).as("__v"),
         col("centroid_id"))
       .cache()
-    // the hub's vector rides the census via min_by (hot cells are rare
-    // by construction, so a vector per hot cell broadcasts cheaply) —
-    // no join-back to recover it
-    val hot = cells.groupBy(col("centroid_id"))
-      .agg(count(lit(1)).as("__n"), min(col("__id")).as("__min"),
-        min_by(col("__v"), col("__id")).as("__hubv"))
-      .filter(col("__n") > maxCell)
-      .select(col("centroid_id"), col("__min"), col("__hubv"))
-    val cold = cells.join(broadcast(hot.select(col("centroid_id"))),
-      Seq("centroid_id"), "left_anti")
-    val coldPairs = cold.as("l")
-      .join(cold.as("r"),
-        col("l.centroid_id") === col("r.centroid_id") &&
-          col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id_a"), col("r.__id").as("id_b"),
-        Similarity.cosine(col("l.__v"), col("r.__v")).as("cosine"))
-    val starPairs = cells.join(broadcast(hot), Seq("centroid_id"))
-      .filter(col("__id") =!= col("__min"))
-      .select(col("__min").as("id_a"), col("__id").as("id_b"),
-        Similarity.cosine(col("__hubv"), col("__v")).as("cosine"))
-    coldPairs.unionByName(starPairs).filter(col("cosine") >= threshold)
+    cosinePairs(bucketPairs(cells, Seq("centroid_id"), Seq("__v"), maxCell),
+      threshold)
   }
 
   /** Semantic dedup: prune `df` to one representative (lowest id) per

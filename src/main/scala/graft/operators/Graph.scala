@@ -124,75 +124,26 @@ object Graph {
     * repartitioned once and cached, so each round re-shuffles ONLY the
     * rank side, which is |V| longs, not |E| edges) and contributions
     * hash-aggregate map-side onto `dst`. Driver holds two scalars
-    * (|V|, base). Lineage grows linearly in `iters`; past ~15 rounds
-    * callers should insert a localCheckpoint — at the 3-8 rounds
-    * centrality ranking needs, plain lineage is cheaper. */
+    * (|V|, base). This is [[pageRankIntSeeded]] with every node a
+    * seed: a uniform base and a uniform initial scale/|V|. */
   def pageRankInt(
       edges: DataFrame,
       iters: Int,
       scale: Long = 1000000000000L,
-      dampMicro: Long = 850000L): DataFrame = {
-    require(iters >= 1, "pageRankInt needs at least one iteration")
-    val spark = edges.sparkSession
-    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-
-    // node set is joined every round — cache it (|V| single-column
-    // rows), or each round re-unions and re-distincts the edge list
-    val nodes = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node")))
-      .distinct()
-      .cache()
-
-    // out-degree-annotated edges, partitioned once on the join key so
-    // every round's rank join reuses this layout instead of
-    // re-shuffling |E| rows
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    val edgesD = edges.join(deg, Seq("src"))
-      .repartition(shufflePartitions, col("src"))
-      .cache()
-
-    try {
-      val n = nodes.count()
-      require(n > 0, "pageRankInt: empty graph")
-      // base = (1 - damp) · scale / n, computed in the overflow-safe
-      // order (scale ≤ 10¹² keeps scale·(10⁶−damp) < 2⁶³)
-      val base = scale * (1000000L - dampMicro) / n / 1000000L
-
-      var rank = nodes.withColumn("rank", lit(scale / n))
-      for (i <- 1 to iters) {
-        val contrib = edgesD
-          .join(rank.withColumnRenamed("node", "src"), Seq("src"))
-          .select(col("dst"), expr("rank div __deg").as("__c"))
-        val incoming = contrib.groupBy(col("dst"))
-          .agg(sum(col("__c")).as("__inc"))
-          .withColumnRenamed("dst", "node")
-        rank = nodes.join(incoming, Seq("node"), "left")
-          .select(col("node"),
-            (lit(base) + expr(
-              s"($dampMicro * coalesce(__inc, 0L)) div 1000000")
-              ).as("rank"))
-        // Materialize every CheckpointEvery rounds and at the last
-        // round (|V| longs — bounded): a per-round checkpoint costs a
-        // driver job + a materialization barrier each round, but a
-        // fully lazy chain nests every round into one plan (optimizer
-        // time grows with iters) — the cadence bounds both. The LAST
-        // round must checkpoint: the finally below unpersists the
-        // edge/node caches, so the returned frame has to be pinned
-        // rows, not a plan that would re-derive them uncached.
-        if (i % CheckpointEvery == 0 || i == iters)
-          rank = rank.localCheckpoint(eager = true)
-      }
-      rank
-    } finally { edgesD.unpersist(); nodes.unpersist() }
-  }
+      dampMicro: Long = 850000L): DataFrame =
+    pageRankIntSeeded(edges,
+      edges.select(col("src").as("node"))
+        .unionByName(edges.select(col("dst").as("node"))),
+      iters, scale, dampMicro)
 
   /** Personalized PageRank: the reset mass teleports ONLY to the seed
     * set instead of uniformly — "importance relative to THESE nodes"
     * (a SIEM ranks lateral-movement reach from compromised hosts; a
     * crawl ranks pages relative to trusted seeds, the TrustRank
-    * shape). Same integer-exact update as [[pageRankInt]] — base mass
-    * is seed-conditional, initial mass scale/|S| on seeds and 0
-    * elsewhere — so every round replays bit-identically in SQL.
+    * shape). The integer-exact update of [[pageRankInt]] (which is this
+    * with every node a seed) — base mass is seed-conditional, initial
+    * mass scale/|S| on seeds and 0 elsewhere — so every round replays
+    * bit-identically in SQL.
     * Same per-round shapes: one rank join + one map-side-combined
     * aggregation, |V|-long rounds checkpointed. */
   def pageRankIntSeeded(
@@ -235,7 +186,14 @@ object Graph {
             (when(col("__s") === 1, lit(base)).otherwise(lit(0L)) +
               expr(s"($dampMicro * coalesce(__inc, 0L)) div 1000000"))
               .as("rank"))
-        // same checkpoint cadence as [[pageRankInt]] (see there)
+        // Materialize every CheckpointEvery rounds and at the last
+        // round (|V| longs — bounded): a per-round checkpoint costs a
+        // driver job + a materialization barrier each round, but a
+        // fully lazy chain nests every round into one plan (optimizer
+        // time grows with iters) — the cadence bounds both. The LAST
+        // round must checkpoint: the finally below unpersists the
+        // edge/node caches, so the returned frame has to be pinned
+        // rows, not a plan that would re-derive them uncached.
         if (i % CheckpointEvery == 0 || i == iters)
           rank = rank.localCheckpoint(eager = true)
       }

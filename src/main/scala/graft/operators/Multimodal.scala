@@ -59,23 +59,20 @@ object Multimodal {
     * distance — re-encoded/resized variants of one asset land within a
     * few bits where [[mediaDedupManifest]]'s exact content hash only
     * catches byte-identical copies. The pairing machinery is the real
-    * part and is shared verbatim with the text SimHash path
-    * ([[Dedup.blockedHammingPairs]]): 4×15-bit pigeonhole blocks
-    * (complete to Hamming ≤ 3), hot-bucket census → star-edge degrade,
-    * only (id, sig, block) longs ever shuffle — the bytes stay at the
-    * scan. The HASH is the codec seam: here a deterministic 60-bit
-    * content hash (first 15 md5 hex chars — engine-replayable, so the
-    * whole pipeline oracles in SQL); a real deployment swaps a DCT
+    * part and is shared with the text SimHash path
+    * ([[Dedup.blockedHammingPairs]], 4×15-bit blocks): only (id, sig,
+    * block) longs ever shuffle — the bytes stay at the scan. The HASH
+    * is the codec seam: here a deterministic 60-bit content hash
+    * (first 15 md5 hex chars — engine-replayable, so the whole
+    * pipeline oracles in SQL); a real deployment swaps a DCT
     * pHash / chromaprint per mime at decode time without touching the
     * join. Output: (id_a, id_b, hamming), id_a < id_b. */
   def mediaNearDupPairs(df: DataFrame, idCol: String, maxDistance: Int = 3,
       maxBlockBucket: Int = 1024): DataFrame = {
-    require(maxDistance <= 3, "block scheme guarantees completeness only to 3")
     val sigs = df.select(col(idCol).as("__id"),
       conv(substring(md5(col(s"$MediaCol.bytes")), 1, 15), 16, 10)
         .cast("long").as("__sig"))
-    Dedup.blockedHammingPairs(Dedup.blockMembers(sigs, 4, 15),
-      maxDistance, maxBlockBucket)
+    Dedup.blockedHammingPairs(sigs, 15, maxDistance, maxBlockBucket)
   }
 
   // ---- codec seam ----------------------------------------------------
@@ -840,42 +837,24 @@ object Multimodal {
 
   /** Pixel-level near-duplicate pairs: REAL decode at the scan, a
     * 60-bit [[Codecs.pixelHash60]] per asset, then the same blocked
-    * Hamming machinery the text SimHash path uses (4×15-bit pigeonhole
-    * blocks, complete to Hamming ≤ 3, hot-bucket census → star-edge
-    * degrade). Only (id, sig, block) longs ever shuffle — pixels and
-    * bytes stay at the scan, which is the whole 100 TB story.
+    * Hamming join as every media near-dup operator
+    * ([[bytesNearDupPairs]]). Pixels and bytes stay at the scan.
     * Undecodable assets are skipped (they have no pixels to compare;
     * [[mediaDedupManifest]] still covers them byte-exactly). Output:
     * (id_a, id_b, hamming), id_a < id_b. */
   def mediaPixelNearDupPairs(df: DataFrame, idCol: String,
-      maxDistance: Int = 3, maxBlockBucket: Int = 1024): DataFrame = {
-    require(maxDistance <= 3, "block scheme guarantees completeness only to 3")
-    val sigSchema = StructType(Seq(
-      StructField("__id", LongType),
-      StructField("__sig", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(sigSchema)
-    val sigs = df
-      .select(col(idCol).cast("long").as("__id"),
-        col(s"$MediaCol.bytes").as("__bytes"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          Codecs.readImage(r.getAs[Array[Byte]]("__bytes"))
-            .map(img => Row(r.getLong(0), Codecs.pixelHash60(img)))
-        }
-      }(enc)
-    Dedup.blockedHammingPairs(Dedup.blockMembers(sigs, 4, 15),
-      maxDistance, maxBlockBucket)
-  }
+      maxDistance: Int = 3, maxBlockBucket: Int = 1024): DataFrame =
+    bytesNearDupPairs(df, idCol, maxDistance, maxBlockBucket)(
+      Codecs.readImage(_).map(Codecs.pixelHash60))
 
   /** NEAR-duplicate audio pairs by 60-bit sign-fingerprint Hamming
     * distance over REAL decoded samples — the audio leg of
     * [[mediaPixelNearDupPairs]]: amplitude-shifted re-encodes of one
     * clip flip only the near-zero fingerprint bits and land within
-    * `maxDistance`. Same shared pairing machinery (4×15-bit pigeonhole
-    * blocks, complete to Hamming ≤ 3, hot-bucket census degrade); only
-    * (id, sig, block) longs shuffle — the audio bytes stay at the
-    * scan. Undecodable clips drop (a corrupt asset must not kill the
-    * scan). Output: (id_a, id_b, hamming), id_a < id_b. */
+    * `maxDistance`. Same shared pairing machinery
+    * ([[bytesNearDupPairs]]). Undecodable clips drop (a corrupt asset
+    * must not kill the scan). Output: (id_a, id_b, hamming),
+    * id_a < id_b. */
   def audioNearDupPairs(df: DataFrame, idCol: String,
       maxDistance: Int = 3, maxBlockBucket: Int = 1024): DataFrame =
     bytesNearDupPairs(df, idCol, maxDistance, maxBlockBucket)(
@@ -883,13 +862,12 @@ object Multimodal {
 
   /** Shared shell of the per-modality near-dup operators: fingerprint
     * each asset's bytes with `hash` (None = undecodable, dropped),
-    * then the 4×15-bit pigeonhole blocked Hamming join — complete to
-    * distance 3, hot-bucket census degrade. Only (id, sig, block)
-    * longs shuffle; the media bytes never leave the scan. */
+    * then the 4×15-bit blocked Hamming join
+    * ([[Dedup.blockedHammingPairs]]). Only (id, sig, block) longs
+    * shuffle; the media bytes never leave the scan. */
   private def bytesNearDupPairs(df: DataFrame, idCol: String,
       maxDistance: Int, maxBlockBucket: Int)(
       hash: Array[Byte] => Option[Long]): DataFrame = {
-    require(maxDistance <= 3, "block scheme guarantees completeness only to 3")
     val sigSchema = StructType(Seq(
       StructField("__id", LongType),
       StructField("__sig", LongType)))
@@ -903,8 +881,7 @@ object Multimodal {
             .map(sig => Row(r.getLong(0), sig))
         }
       }(enc)
-    Dedup.blockedHammingPairs(Dedup.blockMembers(sigs, 4, 15),
-      maxDistance, maxBlockBucket)
+    Dedup.blockedHammingPairs(sigs, 15, maxDistance, maxBlockBucket)
   }
 
   /** NEAR-duplicate video pairs by 60-bit sign-fingerprint Hamming
@@ -913,10 +890,8 @@ object Multimodal {
     * three media axes (pixels/m6, audio/m9, video/m13). The
     * fingerprint ([[Codecs.videoHash60]]) strides frames and pixel
     * positions, so clamped-shift re-encodes flip only near-threshold
-    * bits; the shared pairing machinery (4×15-bit pigeonhole blocks,
-    * complete to Hamming ≤ 3, hot-bucket census degrade) pairs them
-    * back up. Only (id, sig, block) longs shuffle — the video bytes
-    * never leave the scan; undecodable assets drop. Output:
+    * bits; the shared pairing machinery ([[bytesNearDupPairs]]) pairs
+    * them back up. Undecodable assets drop. Output:
     * (id_a, id_b, hamming), id_a < id_b. */
   def videoNearDupPairs(df: DataFrame, idCol: String,
       maxDistance: Int = 3, maxBlockBucket: Int = 1024): DataFrame =

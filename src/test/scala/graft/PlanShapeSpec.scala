@@ -405,15 +405,19 @@ class PlanShapeSpec extends SparkSpec {
     assert(!s.contains("SortMergeJoin"), s)
     assert(s.contains("BroadcastNestedLoopJoin") || s.contains("BroadcastHashJoin"), s)
     // the full-precision embedding column is pruned OUT of the code
-    // scan — the serving path's 4x-bandwidth claim, enforced (string
-    // match: the scan nodes sit under an unfinalized AQE wrapper, so a
-    // collect() over executedPlan cannot reach them)
-    val codeScan = s.linesIterator
-      .filter(l => l.contains("FileScan parquet") && l.contains("/codes"))
-      .toSeq
-    assert(codeScan.nonEmpty, s)
-    assert(codeScan.forall(
-      _.contains("ReadSchema: struct<vec_id:bigint,codes:array<int>>")), s)
+    // scan — the serving path's 4x-bandwidth claim, enforced. The
+    // scans' own root paths and schemas: the plan string cuts a
+    // location at spark.sql.maxMetadataStringLength characters
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val codeScans = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case scan: FileSourceScanExec
+          if scan.relation.location.rootPaths.exists(_.toUri.getPath.endsWith("/codes")) =>
+        scan.requiredSchema.catalogString
+    }
+    assert(codeScans.nonEmpty, s)
+    assert(codeScans.forall(_ == "struct<vec_id:bigint,codes:array<int>>"),
+      s"$codeScans\n$s")
   }
 
   test("phrase mining: one cached token fork, broadcast 1-row total, top-k heap") {
